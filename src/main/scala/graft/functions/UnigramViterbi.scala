@@ -26,8 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *     coalesce(try_element_at(m, k), miss);
   *   - backtrack emits pieces END-of-word-first (pc1..pc8 order), at
   *     most 8, exactly the cascade's filtered [pc1..pc8] array;
-  *   - a word outside 1..8 codepoints yields (NULL, empty array), the
-  *     cascade's no-CASE-arm-matches behavior.
+  *   - a word outside 1..8 codepoints, or a NULL word, yields (NULL,
+  *     empty array), the cascade's no-CASE-arm-matches behavior; a NULL
+  *     model scores every piece as a miss, like the cascade's coalesce.
   *
   * Why native: the cascade evaluates ~64 `try_element_at` map probes
   * per row (each a LINEAR scan of the ~80-entry model MapData — and the
@@ -46,6 +47,9 @@ final case class UnigramViterbi(left: Expression, right: Expression)
 
   override def dataType: DataType = UnigramViterbi.OutType
 
+  /** Never NULL: a NULL word segments to (NULL, []) like the cascade. */
+  override def nullable: Boolean = false
+
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
       case (StringType, MapType(StringType, LongType, _)) =>
@@ -63,21 +67,22 @@ final case class UnigramViterbi(left: Expression, right: Expression)
     * memory. */
   @transient private lazy val table
       : java.util.HashMap[UTF8String, java.lang.Long] = {
+    val t = new java.util.HashMap[UTF8String, java.lang.Long]()
     val m = right.eval(null).asInstanceOf[MapData]
-    val t = new java.util.HashMap[UTF8String, java.lang.Long](
-      m.numElements() * 2)
-    val ks = m.keyArray()
-    val vs = m.valueArray()
-    var i = 0
-    while (i < m.numElements()) {
-      t.put(ks.getUTF8String(i).clone(), vs.getLong(i))
-      i += 1
+    if (m != null) {
+      val ks = m.keyArray()
+      val vs = m.valueArray()
+      var i = 0
+      while (i < m.numElements()) {
+        t.put(ks.getUTF8String(i).clone(), vs.getLong(i))
+        i += 1
+      }
     }
     t
   }
 
-  override def nullSafeEval(word: Any, model: Any): Any =
-    UnigramViterbi.segment(word.asInstanceOf[UTF8String], table)
+  override def eval(input: InternalRow): Any =
+    UnigramViterbi.segment(left.eval(input).asInstanceOf[UTF8String], table)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): UnigramViterbi =
@@ -107,7 +112,7 @@ object UnigramViterbi {
   /** The DP itself (shared with the spec's direct probes). */
   def segment(w: UTF8String,
       table: java.util.HashMap[UTF8String, java.lang.Long]): InternalRow = {
-    val len = w.numChars()
+    val len = if (w == null) 0 else w.numChars()
     if (len < 1 || len > MaxWord) return InternalRow(null, EmptyPcs)
     def score(start: Int, l: Int): Long = {
       val v = table.get(w.substringSQL(start, l))

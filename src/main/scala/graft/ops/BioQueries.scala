@@ -298,7 +298,7 @@ object BioQueries {
 
   // ---------------------------------------------------------------- b13
   /** P6 resolution pyramid end-to-end: an 8×8 formulaic plane saved with
-    * levels=2 (level 1 = distributed 2× mean-pool), re-opened, level 1
+    * levels=2 (level 1 = per-plane 2× mean-pool), re-opened, level 1
     * selected, pixels checked against the oracle's own pooling. */
   val b13PyramidLevel: Q = (spark, _) => {
     val arr = NDArray.tabulate(Seq(8, 8))(idx => idx(0) * 10.0 + idx(1))
@@ -540,12 +540,12 @@ object BioQueries {
   // ---------------------------------------------------------------- b21
   /** Multimodal frame pipeline (the training-data shape for video-like
     * payloads): frame-sample every 2nd T plane → 2× mean-pool resize
-    * (distributed poolHalf) → per-frame feature extraction (count / mean /
-    * min / max over the resized pixels). Each stage is plane-table
-    * composition — filter, groupBy pooling, explode + aggregate — so the
-    * whole pipeline shuffles only for the pooling and the final per-frame
-    * aggregate. The oracle replays sampling, pooling and features on the
-    * regenerated grid (all arithmetic exact in doubles). */
+    * (poolHalf, inside each plane row) → per-frame feature extraction
+    * (count / mean / min / max over the resized pixels). Each stage is
+    * plane-table composition — filter, per-row pooling, explode +
+    * aggregate — so the whole pipeline shuffles only for the final
+    * per-frame aggregate. The oracle replays sampling, pooling and
+    * features on the regenerated grid (all arithmetic exact in doubles). */
   val b21FramePipeline: Q = (spark, _) => {
     val arr = NDArray.tabulate(Seq(8, 6, 6))(idx =>
       idx(0) * 100.0 + idx(1) * 10.0 + idx(2))

@@ -7,7 +7,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions.col
 
-import graft.core.PixelType
+import graft.core.{PixelType, Plane}
 import graft.formats.TiffFormat
 import graft.image.BioImage
 import graft.meta.{OME, OmeChannel, OmeImage, OmePixels, OmeXml}
@@ -43,49 +43,6 @@ final case class TiffOptions(
   * the parallel-writer scale path; OME-TIFF is the interchange sink.
   */
 object OmeTiffWriter extends BioWriter {
-
-  /** 2× mean-pool of one interleaved plane: ceil-halved dims, edge blocks
-    * average the pixels that exist — identical semantics to the parquet
-    * plane store's distributed Plane.poolHalf, so a pyramid written here
-    * and one written by the store agree bit-for-bit on float data. */
-  private[graft] def downsample2x(px: Array[Double], h: Int, w: Int,
-      nS: Int): (Array[Double], Int, Int) = {
-    val h2 = (h + 1) / 2
-    val w2 = (w + 1) / 2
-    val out = new Array[Double](h2 * w2 * nS)
-    var y = 0
-    while (y < h2) {
-      var x = 0
-      while (x < w2) {
-        var si = 0
-        while (si < nS) {
-          var sum = 0.0
-          var cnt = 0
-          var dy = 0
-          while (dy < 2) {
-            val yy = y * 2 + dy
-            if (yy < h) {
-              var dx = 0
-              while (dx < 2) {
-                val xx = x * 2 + dx
-                if (xx < w) {
-                  sum += px((yy * w + xx) * nS + si)
-                  cnt += 1
-                }
-                dx += 1
-              }
-            }
-            dy += 1
-          }
-          out((y * w2 + x) * nS + si) = sum / cnt
-          si += 1
-        }
-        x += 1
-      }
-      y += 1
-    }
-    (out, h2, w2)
-  }
 
   override def name: String = "OmeTiffWriter"
   override def supportedExtensions: Seq[String] =
@@ -258,16 +215,17 @@ object OmeTiffWriter extends BioWriter {
             si += 1
           }
 
-          // pyramid: level 0 = full res, each further level a ceil-halved
-          // 2× mean-pool (matching Plane.poolHalf edge semantics); stops
-          // early at 1×1
+          // pyramid: level 0 = full res, each further level the ceil-halved
+          // 2× mean pool of Plane.meanPool2x (the kernel behind the plane
+          // store's and Zarr's pyramids, so their levels agree bit for
+          // bit); stops early at 1×1
           val levelPx: Seq[(Array[Double], Int, Int)] = {
             val b = Seq.newBuilder[(Array[Double], Int, Int)]
             var cur = (px, s.h, s.w)
             b += cur
             var k = 1
             while (k < opts.pyramidLevels && (cur._2 > 1 || cur._3 > 1)) {
-              cur = downsample2x(cur._1, cur._2, cur._3, nS)
+              cur = Plane.meanPool2x(cur._1, cur._2, cur._3, nS)
               b += cur
               k += 1
             }

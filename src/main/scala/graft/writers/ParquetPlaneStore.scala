@@ -19,8 +19,8 @@ import graft.plugins.{BioReader, PluginEntry, SceneMeta}
   * bio_image.py:1229-1301), re-expressed as a Spark-native columnar store.
   * Resolution pyramids (bio_image.py:548-604) are materialized as extra
   * `level` partitions: level l is a 2× mean-pool of level l-1, computed
-  * distributed (groupBy on halved coordinates — two shuffles per level,
-  * each over 4× less data than the previous).
+  * inside each plane row (`Plane.pyramid`: one scan of the source, every
+  * level from the one before it, no shuffle).
   */
 object ParquetPlaneStore {
   val Extension = ".graft"
@@ -45,10 +45,9 @@ object ParquetPlaneStore {
       img.setScene(saved)
       df
     }.reduce(_ unionByName _)
-    // pyramid: level l derived from level l-1 (each step pools 4× less
-    // data than the previous — a tree reduction, not repeated full passes)
-    val all = Iterator.iterate(level0)(graft.core.Plane.poolHalf).take(levels)
-      .reduce(_ unionByName _)
+    // pyramid: every level from one decode of the source, level l pooled
+    // from level l-1 in the same row
+    val all = graft.core.Plane.pyramid(level0, levels)
     // Repartition includes (t,c,z) so a single huge scene/level fans out
     // across many writer tasks instead of serializing through one; the
     // directory layout (partitionBy) is unchanged.

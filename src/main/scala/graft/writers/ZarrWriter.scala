@@ -106,21 +106,19 @@ object ZarrWriter extends BioWriter {
         (col("x0") / tw).cast("int").as("xi"),
         array(col("pixels")).as("bands")), grid)
     } else {
-      val levelDfs = Iterator.iterate(img.stitchedPlanes)(Plane.poolHalf)
-        .take(levels).toSeq
-      val unioned = levelDfs.map { df =>
+      val levelPlanes = Plane.pyramid(img.stitchedPlanes, levels)
+      val unioned =
         if (nS == 1)
-          df.select(col("level"), col("t"), col("c"), col("z"),
+          levelPlanes.select(col("level"), col("t"), col("c"), col("z"),
             col("h"), col("w"), array(col("pixels")).as("bands"))
         else
-          df.select(col("level"), col("t"), col("c"), col("z"), col("s"),
-            col("h"), col("w"), col("pixels"))
+          levelPlanes.select(col("level"), col("t"), col("c"), col("z"),
+            col("s"), col("h"), col("w"), col("pixels"))
             .groupBy(col("level"), col("t"), col("c"), col("z"),
               col("h"), col("w"))
             .agg(transform(
               array_sort(collect_list(struct(col("s"), col("pixels")))),
               b => b.getField("pixels")).as("bands"))
-      }.reduce(_ unionByName _)
       val rows = chunk match {
         case None =>
           unioned.select(col("level"), col("t"), col("c"), col("z"),

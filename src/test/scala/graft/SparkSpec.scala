@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,6 +32,19 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Runs `f` on a fresh temp directory and deletes the directory
+    * recursively afterwards, whether `f` returned or threw. */
+  def withTempDir[T](prefix: String = "graft")(f: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally {
+      val paths = Files.walk(dir)
+      try paths.sorted(Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+  }
 
   /** Cache-lifecycle guard: NO test may leave an entry in the cache
     * manager behind (the round-9 bench regression was exactly such a

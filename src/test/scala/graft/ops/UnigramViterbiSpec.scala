@@ -99,6 +99,19 @@ class UnigramViterbiSpec extends SparkSpec {
     }
   }
 
+  test("a NULL word yields (null, empty) in both renderings, not a NULL " +
+      "struct") {
+    val model = Map("a" -> -1024L)
+    val words = Seq(null, "a")
+    val (ref, got) = collectBoth(words, model)
+    assert(ref(null) == ((None, Seq.empty[String])), "cascade on NULL")
+    assert(got(null) == ((None, Seq.empty[String])), "native on NULL")
+    assert(got("a") == ref("a"))
+    // a NULL model: every piece is a miss in both renderings
+    val (refNull, gotNull) = collectBoth(Seq("ab", null), null)
+    assert(gotNull == refNull)
+  }
+
   test("the model must be a foldable literal map") {
     val df = spark.createDataFrame(Seq(Tuple1("ab"))).toDF("w")
     val err = intercept[Exception] {

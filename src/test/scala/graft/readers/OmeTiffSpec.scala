@@ -873,7 +873,7 @@ class OmeTiffSpec extends SparkSpec {
     assert(back.resolutionLevels == Seq(0, 1))
     back.setResolutionLevel(1)
     val (expected, h1, w1) =
-      OmeTiffWriter.downsample2x(arr.data, 20, 24, 1)
+      graft.core.Plane.meanPool2x(arr.data, 20, 24, 1)
     assert((h1, w1) == (10, 12))
     val nd = back.getImageData("YX")
     assert(nd.array.shape == Seq(10, 12))
