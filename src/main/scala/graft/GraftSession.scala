@@ -34,6 +34,11 @@ object GraftSession {
       // cluster node missing libhadoop.
       .config("spark.hadoop.fs.file.impl",
         "graft.sources.FastLocalFileSystem")
+      // the same for FileContext users (streaming checkpoints): stock
+      // LocalFs forks /bin/chmod per created file and readlink per
+      // status lookup
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "graft.sources.FastLocalFs")
 
   /** Local session for tests / benchmarks. */
   def local(appName: String = "graft"): SparkSession = {

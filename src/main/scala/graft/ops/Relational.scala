@@ -2295,7 +2295,8 @@ object Relational {
     * DPP-over-file-stats shape ([[graft.sources.LakeRuntimeFilterScan]]):
     * lineitem lands range-clustered by `l_suppkey`
     * (`graft.write.ordered-by`, so each data file owns a disjoint key
-    * slice), supplier filters to one nation, and at EXECUTION time
+    * slice; the fact lands as 32 range partitions so there are files
+    * to drop), supplier filters to one nation, and at EXECUTION time
     * Spark's dynamic-pruning subquery hands the surviving supplier
     * keys to the fact scan, which drops every file whose manifest
     * [min,max] misses them — before a single task launches. The
@@ -2318,7 +2319,19 @@ object Relational {
     spark.sql(s"CREATE TABLE $cat.fact (l_suppkey BIGINT, " +
       "l_extendedprice DOUBLE, l_discount DOUBLE) " +
       "TBLPROPERTIES('graft.write.ordered-by'='l_suppkey')")
-    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM q190_fact_$nonce")
+    // 32 range partitions, not coalesced: the fact lands as many data
+    // files, each owning a narrow l_suppkey slice for the filter to drop
+    val saved = Seq("spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+      .map { case (k, v) =>
+        val prev = spark.conf.getOption(k)
+        spark.conf.set(k, v)
+        k -> prev
+      }
+    try spark.sql(s"INSERT INTO $cat.fact SELECT * FROM q190_fact_$nonce")
+    finally saved.foreach { case (k, v) =>
+      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
     t(spark, dir, "supplier")
       .select(col("s_suppkey"), col("s_nationkey"))
       .createOrReplaceTempView(s"q190_supp_$nonce")
@@ -4696,8 +4709,11 @@ object Relational {
     spark.sql(s"CREATE TABLE $cat.orders_v AS SELECT * FROM q179_pre")
     spark.sql(s"INSERT INTO $cat.orders_v SELECT * FROM q179_post")
     spark.sql(s"INSERT OVERWRITE $cat.orders_v SELECT * FROM q179_f")
+    // a version holds data files exactly when it holds rows (CREATE's
+    // version 0 is manifest-only)
     spark.sql(
-      s"""SELECT version, total_rows, n_files >= 1 AS files_ok
+      s"""SELECT version, total_rows,
+         |  (n_files >= 1) = (total_rows > 0) AS files_ok
          |FROM $cat.orders_v.versions ORDER BY version""".stripMargin)
   }
 

@@ -166,12 +166,13 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     new GraftLakeTable(ident, d, Some(v))
   }
 
-  /** CREATE TABLE — publishes version 0 as an EMPTY snapshot carrying
-    * the declared schema (one schema-bearing empty parquet file), so
-    * the table is immediately loadable and the first INSERT is an
-    * ordinary append commit. `PARTITIONED BY (col)` /
-    * `PARTITIONED BY (bucket(n, col))` persists as the
-    * `graft.partitioning` property ([[LakePartitioning]]): every
+  /** CREATE TABLE — publishes version 0 as a manifest-only EMPTY
+    * snapshot that records the declared schema ([[LakeSchema]]; no
+    * data file and no Spark job), so the table is immediately loadable
+    * and the first INSERT is an ordinary append commit.
+    * `PARTITIONED BY (col)` / `PARTITIONED BY (bucket(n, col))`
+    * persists as the `graft.partitioning` property
+    * ([[LakePartitioning]]): every
     * commit routes rows so each data file owns ONE partition value,
     * and reads report key-grouped partitioning — the
     * storage-partitioned-join layout. The spec is structural and
@@ -190,8 +191,8 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    // defaults are an ALTER-time evolution here: a CREATE-time default
-    // would vanish in the carrier file's parquet roundtrip — refuse
+    // defaults are an ALTER-time evolution here ([[LakeDefaults]]
+    // lives in snapshot meta, which CREATE does not write) — refuse
     // loudly rather than silently dropping it
     schema.fields.find(_.metadata.contains(LakeDefaults.CurrentKey))
       .foreach(f => throw new UnsupportedOperationException(
@@ -224,10 +225,10 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
 
   /** `ALTER TABLE ... ADD COLUMN(S)` — additive evolution ONLY, the
     * lakehouse-safe subset: each added column is appended by
-    * publishing a carry-forward commit whose delta is one
-    * schema-bearing EMPTY parquet file, so the widened schema
-    * surfaces through the same mergeSchema reads that already serve
-    * implicit widening ([[VersionedTable.read]]), prior data is
+    * publishing a manifest-only carry-forward commit whose recorded
+    * schema ([[LakeSchema]]) gains the column, so the widened schema
+    * surfaces through the same recorded-schema reads that already
+    * serve implicit widening ([[VersionedTable.read]]), prior data is
     * untouched (new column reads NULL over old files), and prior
     * snapshots keep their exact shape under `VERSION AS OF`. Rename/
     * drop/retype are rejected: they would re-interpret bytes already
@@ -396,7 +397,7 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     // value both served from snapshot meta (old files fill via the
     // readers' existence-default machinery, new files write the
     // value, time travel below the add serves absence); a plain add
-    // keeps the original empty-carrier-file contract.
+    // is a manifest-only commit recording the widened schema.
     if (!hasEvolution && baseMapping.isIdentity) {
       var defaultMeta = Map.empty[String, String]
       val widened = rest.foldLeft(logical) {
@@ -463,9 +464,9 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
     // see them (a mapping entry with no backing file corrupts mapped
     // reads) — their rename/drop is pure meta re-keying below
     val rawFields: Set[String] =
-      if (snap.dataFiles.isEmpty) Set.empty
-      else spark.read.option("mergeSchema", "true")
-        .parquet(snap.dataFiles: _*).schema.fieldNames
+      if (snap.dataFiles.isEmpty && LakeSchema.fromMeta(snap.meta).isEmpty)
+        Set.empty
+      else LakeSchema.physicalSchema(spark, snap).fieldNames
         .map(_.toLowerCase).toSet
     val metaOnlyDefaults: Set[String] =
       LakeDefaults.fromMeta(snap.meta).map(_._1).filter { nm =>
@@ -552,7 +553,7 @@ final class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       case _ => "alter-schema"
     }
     if (carriers.nonEmpty) {
-      // ADD on a mapped table: the carrier file must land the new
+      // ADD on a mapped table: the recorded schema must gain the new
       // columns under their PHYSICAL names next to the existing
       // physical schema — commitAs must not re-map it
       val physSchema = StructType(
@@ -905,12 +906,17 @@ final class GraftLakeTable(ident: Identifier, dir: String,
       : Map[String, org.apache.spark.sql.types.DataType] =
     LakeTypeWidening.fromMeta(snapshot.meta)
 
-  private lazy val delegate: ParquetTable = {
-    // materialized lineage columns must stay readable even when the
-    // schema source (a fresh append / the recorded union on an old
-    // snapshot) lacks them — the lineage scan reads them from older
-    // rewritten files
-    def withLineageGuard(sch: StructType): StructType =
+  /** The snapshot's physical schema, resolved from the MANIFEST
+    * ([[LakeSchema.physicalSchema]]: one manifest read instead of
+    * O(files) footer IO at plan time; inferred only on legacy
+    * snapshots) with widen overrides on top and every field nullable as
+    * the parquet scan serves it. Materialized lineage columns stay
+    * readable even when the schema source (a fresh append / the
+    * recorded union on an old snapshot) lacks them — the lineage scan
+    * reads them from older rewritten files. */
+  private lazy val physicalSchema: StructType = {
+    val sch = LakeSchema.physicalSchema(spark, snapshot)
+    org.apache.spark.sql.graftbridge.ParquetRowWriterBridge.asRead(
       if (snapshot.stats.valuesIterator.exists(
           _.cols.contains(LakeRowLineage.PhysRowId)) &&
           !sch.fieldNames.exists(_.equalsIgnoreCase(
@@ -919,40 +925,16 @@ final class GraftLakeTable(ident: Identifier, dir: String,
             org.apache.spark.sql.types.LongType)
           .add(LakeRowLineage.PhysLastUpd,
             org.apache.spark.sql.types.IntegerType)
-      else sch
-    // MANIFEST-RECORDED schema ([[LakeSchema]]): schema resolution is
-    // one manifest read instead of O(files) footer IO at plan time —
-    // widen overrides apply on top, exactly as over the inference.
-    LakeSchema.fromMeta(snapshot.meta) match {
-      case Some(rec) =>
-        ParquetTable(ident.toString, spark,
-          CaseInsensitiveStringMap.empty(),
-          snapshot.dataFiles,
-          Some(withLineageGuard(
-            LakeTypeWidening.widen(rec, widenOverrides))),
-          classOf[ParquetFileFormat])
-      case None if widenOverrides.isEmpty =>
-        ParquetTable(ident.toString, spark,
-          new CaseInsensitiveStringMap(
-            Map("mergeSchema" -> "true").asJava),
-          snapshot.dataFiles,
-          None, classOf[ParquetFileFormat])
-      case None =>
-        // widened legacy tables carry an EXPLICIT schema: schema
-        // merging would refuse the int/long file mix, while the
-        // parquet readers natively upcast narrow files to the
-        // declared wide type. The base column set comes from the
-        // newest file — every commit writes the full current schema.
-        val newest = snapshot.dataFiles.maxBy(p =>
-          LakePartitioning.fileVersionOfPath(p).getOrElse(-1))
-        val wide = withLineageGuard(LakeTypeWidening.widen(
-          spark.read.parquet(newest).schema, widenOverrides))
-        ParquetTable(ident.toString, spark,
-          CaseInsensitiveStringMap.empty(),
-          snapshot.dataFiles,
-          Some(wide), classOf[ParquetFileFormat])
-    }
+      else sch)
   }
+
+  /** Reads delegate to Spark's own parquet table over the snapshot's
+    * files under the EXPLICIT physical schema: the readers natively
+    * upcast narrow files to a widened type and read a column a file
+    * lacks as null. */
+  private lazy val delegate: ParquetTable =
+    ParquetTable(ident.toString, spark, CaseInsensitiveStringMap.empty(),
+      snapshot.dataFiles, Some(physicalSchema), classOf[ParquetFileFormat])
 
   override def name(): String = ident.toString
 
@@ -963,10 +945,12 @@ final class GraftLakeTable(ident: Identifier, dir: String,
     LakeColumnMapping.fromMeta(snapshot.meta).filterNot(_.isIdentity)
 
   override def schema(): StructType = {
+    // the physical schema answers directly: going through the parquet
+    // delegate would build its file index (an existence check and a
+    // status call per data file) on every INSERT's planning
     val s = mapping match {
-      case Some(m) =>
-        LakeColumnMapping.logicalSchema(m, (delegate: Table).schema())
-      case None => (delegate: Table).schema()
+      case Some(m) => LakeColumnMapping.logicalSchema(m, physicalSchema)
+      case None => physicalSchema
     }
     // hidden physical lineage + shredded-JSON columns are served as
     // METADATA columns, never data; declared DEFAULT columns enrich
@@ -1134,8 +1118,7 @@ final class GraftLakeTable(ident: Identifier, dir: String,
             reportOrdering = orderingToReport,
             lineage =
               if (lineageOn)
-                Some((LakeRowLineage.perFile(snapshot),
-                  (delegate: Table).schema()))
+                Some((LakeRowLineage.perFile(snapshot), physicalSchema))
               else None,
             rebuildInner = () => delegate.newScanBuilder(options) match {
               case fb: org.apache.spark.sql.execution.datasources.v2

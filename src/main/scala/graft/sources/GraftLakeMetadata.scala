@@ -158,7 +158,8 @@ final class GraftLakePartitionsTable(tableName: String, dir: String)
         genOf(p).map(_.map(_.serialized).mkString(","))
           .getOrElse("unpartitioned")
       val grouped = snap.dataFiles
-        // the v-created empty schema carrier has no rows to report
+        // a 0-row unclaimed file (an older CREATE's empty schema
+        // file) has no rows to report
         .filterNot(p => snap.stats.get(p).exists(_.rowCount == 0L) &&
           claim(p).isEmpty)
         .groupBy(p => (specLabel(p), claim(p)))

@@ -832,10 +832,9 @@ object LakePartitioning {
   }
 
   /** All plain files under `dir`, descending into (arbitrarily
-    * nested) `__graft_part*=` partition directories — the ONE listing
-    * rule every consumer (commit listing, vacuum classification,
-    * streaming epoch staging) shares, so none of them can disagree
-    * about what a landed data dir contains. */
+    * nested) `__graft_part*=` partition directories — what vacuum
+    * classifies in a landed data dir (commits never list: they
+    * publish what their write tasks report). */
   private[sources] def leafFiles(f: FileSystem,
       dir: Path): Seq[FileStatus] = {
     val entries = f.listStatus(dir).toSeq
@@ -887,9 +886,10 @@ object LakePartitioning {
   * `EnsureRequirements` then plans joins between co-partitioned
   * tables WITHOUT exchanges — the storage-partitioned join.
   *
-  * Files with no key claim (proven 0-row schema carriers) are
-  * dropped; the builder only engages this scan when every OTHER data
-  * file claims a value tuple, so the grouping is total. Runtime file
+  * Files with no key claim (proven 0-row files, such as an older
+  * CREATE's empty schema file) are dropped; the builder only engages
+  * this scan when every OTHER data file claims a value tuple, so the
+  * grouping is total. Runtime file
   * pruning is deliberately NOT declared here: Spark requires
   * key-grouped partition values to be stable under runtime
   * filtering, and the SPJ itself removes the join shuffle DPP would
@@ -970,7 +970,8 @@ final class LakeKeyGroupedScan(inner: Scan,
               case some @ Some(_) => some.map(k => (k, pf))
               case None if provenEmpty.contains(norm) ||
                   staticallyPruned.contains(norm) =>
-                // stats-proven 0-row schema carrier, or a file the
+                // stats-proven 0-row file (an older CREATE's empty
+                // schema file), or a file the
                 // static partition prune PROVED claim-mismatched:
                 // no servable rows, dropping the split is exact
                 None

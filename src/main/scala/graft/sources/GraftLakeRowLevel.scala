@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetTable, ParquetWrite}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
@@ -34,14 +34,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    IO, the Delta/Iceberg stats-pruning discipline. A selective
   *    UPDATE on a 100 TB table reads and rewrites the touched sliver,
   *    never the table.
-  *  - **Write side**: the rewritten rows land through Spark's own V2
-  *    parquet write ([[ParquetWrite]]) into a fresh immutable
+  *  - **Write side**: the rewritten rows land through the task-side
+  *    lake writer ([[LakeWriter]]) into a fresh immutable
   *    `files-v<N>-<nonce>/` dir; `commit` then publishes a manifest
   *    listing every UNSELECTED file by reference (byte-identical
-  *    paths, zero IO) plus the new files — the same atomic
-  *    manifest-rename commit point as every other lake write. The
+  *    paths, zero IO) plus the files and stats the tasks reported —
+  *    the same atomic manifest publish as every other lake write. The
   *    version was pinned when the operation was created, so a
-  *    concurrent committer makes the rename fail LOUDLY (optimistic
+  *    concurrent committer makes the publish fail LOUDLY (optimistic
   *    concurrency) instead of silently dropping either write.
   *
   * If a statement plans multiple scans over the operation (Spark's
@@ -242,7 +242,7 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
   private def batchWrite(info: LogicalWriteInfo,
       partSpecs: Option[Seq[LakePartitioning.Spec]]): BatchWrite = {
           // next FREE number, not pinnedV+1: branch-staged manifests
-          // share the sequence, and a collision would fail the rename
+          // share the sequence, and a collision would fail the publish
           val newV = VersionedTable.nextVersion(spark, dir)
           val dataDir = s"$dir/files-v$newV-" +
             java.util.UUID.randomUUID().toString.take(8)
@@ -259,58 +259,33 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
               org.apache.spark.sql.types.StructField(
                 LakeRowLineage.PhysLastUpd,
                 org.apache.spark.sql.types.IntegerType)))
-          val writeInfo: LogicalWriteInfo =
-            if (!lineageOn) info
-            else new LogicalWriteInfo {
-              override def options(): CaseInsensitiveStringMap =
-                info.options()
-              override def queryId(): String = info.queryId()
-              override def schema(): StructType = writeSchema
-            }
-          val inner = partSpecs match {
-            case None =>
-              ParquetWrite(Seq(dataDir), "parquet",
-                (_: org.apache.spark.sql.types.DataType) => true,
-                writeInfo).toBatch
-            case Some(specs) =>
-              // partition-routing fanout: claims restore with the
-              // rewrite, published from the tasks' COMMIT MESSAGES
-              // (a speculative attempt's stray files are never
-              // referenced; vacuum sweeps them). Partition columns
-              // keep their ordinals under the widened schema (lineage
-              // fields append at the END), so the router is exact.
-              new LakeFanoutBatchWrite(dataDir,
-                org.apache.spark.sql.graftbridge.ParquetRowWriterBridge
-                  .prepare(spark, writeSchema),
-                LakePartitioning.rowRouter(specs, writeSchema),
-                spark.sparkContext.hadoopConfiguration)
-          }
+          // rows land through the task-side lake writer: routed into
+          // claim dirs on a PARTITIONED table (replacement files keep
+          // the key-claim layout; partition columns keep their
+          // ordinals under the widened schema — lineage fields append
+          // at the END — so the router is exact), and published from
+          // the tasks' COMMIT MESSAGES with the stats each task built
+          // from its footer (a failed or speculative attempt's stray
+          // files are never referenced; vacuum sweeps them)
+          val factory = LakeWriter.factory(spark, dataDir, writeSchema,
+            partSpecs)
           new BatchWrite {
             override def createBatchWriterFactory(
                 p: PhysicalWriteInfo): DataWriterFactory =
-              if (lineageOn)
-                new LineageWriterFactory(
-                  inner.createBatchWriterFactory(p))
-              else new OpStrippingWriterFactory(
-                inner.createBatchWriterFactory(p), info.schema())
-            override def useCommitCoordinator(): Boolean =
-              inner.useCommitCoordinator()
+              if (lineageOn) new LineageWriterFactory(factory)
+              else new OpStrippingWriterFactory(factory, info.schema())
+            override def useCommitCoordinator(): Boolean = true
             override def commit(msgs: Array[WriterCommitMessage]): Unit = {
-              inner.commit(msgs)
               val s = spark
               val replaced = replacedFiles.toSet
               val kept = snapshotFiles.filterNot(replaced.contains)
-              val fresh = inner match {
-                case f: LakeFanoutBatchWrite => f.committedFiles(s, msgs)
-                case _ => VersionedTable.listDataFiles(s, dir, dataDir)
-              }
+              val fresh = LakeWriter.files(msgs.toSeq)
               // DV path replaces every file (scan applied the masks),
               // so the published snapshot is clean; on the pruned COW
               // path no masks existed to carry
               val deletes =
                 if (kept.isEmpty) Seq.empty[String] else snap.deleteFiles
-              // carried files keep manifest stats by reference; only
-              // the fresh files' footers are read at publish. Staged
+              // carried files keep manifest stats by reference. Staged
               // (WAP) DML labels the manifest and advances the branch
               // ref — main is untouched until fast_forward.
               val meta = branch match {
@@ -318,108 +293,24 @@ final class GraftLakeRowLevelOperation(dir: String, cmd: Command,
                   snap.meta + (VersionedTable.BranchMetaKey -> b)
                 case None => snap.meta
               }
-              VersionedTable.publishVersion(s, dir, newV, kept ++ fresh,
-                deletes, snap.stats, meta,
-                op = cmd.toString.toLowerCase)
+              VersionedTable.publishVersion(s, dir, newV,
+                kept ++ fresh.map(_._1), deletes, snap.stats ++ fresh,
+                meta, op = cmd.toString.toLowerCase,
+                written = Some(writeSchema))
               branch.foreach(b =>
                 VersionedTable.moveBranch(s, dir, b, newV))
               ()
             }
-            override def abort(msgs: Array[WriterCommitMessage]): Unit =
-              inner.abort(msgs)
+            override def abort(msgs: Array[WriterCommitMessage]): Unit = {
+              // driver-side cleanup with the SESSION Hadoop conf
+              // (spark.hadoop.* credentials included)
+              val p = new Path(factory.dataDir)
+              p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                .delete(p, true)
+              ()
+            }
           }
   }
-}
-
-/** Partition-routing BATCH write for row-level rewrites over a
-  * PARTITIONED table: each task opens one parquet file per partition
-  * value it sees under the staged data dir's nested
-  * `__graft_part*=<v>/` claim dirs (the same layout every other
-  * routing writer lands), and its commit message carries the exact
-  * file paths — the publish references ONLY message-committed files,
-  * so a speculative or failed attempt's strays are never referenced
-  * and vacuum sweeps them. */
-private final class LakeFanoutBatchWrite(dataDir: String,
-    prepared: org.apache.spark.sql.graftbridge.ParquetRowWriterBridge.Prepared,
-    router: org.apache.spark.sql.catalyst.InternalRow => String,
-    @transient hadoopConf: org.apache.hadoop.conf.Configuration)
-    extends BatchWrite {
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  override def createBatchWriterFactory(
-      p: PhysicalWriteInfo): DataWriterFactory =
-    LakeFanoutWriterFactory(dataDir, prepared, router)
-
-  override def useCommitCoordinator(): Boolean = true
-
-  override def commit(msgs: Array[WriterCommitMessage]): Unit = ()
-
-  override def abort(msgs: Array[WriterCommitMessage]): Unit = {
-    // driver-side cleanup: the SESSION Hadoop conf (spark.hadoop.*
-    // credentials included) — a bare new Configuration() would fail
-    // silently on configured filesystems, leaving strays to vacuum
-    val p = new org.apache.hadoop.fs.Path(dataDir)
-    p.getFileSystem(hadoopConf).delete(p, true)
-    ()
-  }
-
-  /** The committed replacement files — exactly the tasks' messages,
-    * fully qualified to manifest form. */
-  def committedFiles(spark: SparkSession,
-      msgs: Array[WriterCommitMessage]): Seq[String] = {
-    val f = new org.apache.hadoop.fs.Path(dataDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    msgs.toSeq.collect { case LakeBatchFilesMessage(paths) =>
-      paths.map(p =>
-        f.makeQualified(new org.apache.hadoop.fs.Path(p)).toString)
-    }.flatten
-  }
-}
-
-private final case class LakeBatchFilesMessage(paths: Seq[String])
-    extends WriterCommitMessage
-
-/** Serializable fanout task writer: one open parquet file per
-  * partition value the task sees, nested claim dirs, paths reported
-  * through the commit message. */
-private final case class LakeFanoutWriterFactory(dataDir: String,
-    prepared: org.apache.spark.sql.graftbridge.ParquetRowWriterBridge.Prepared,
-    router: org.apache.spark.sql.catalyst.InternalRow => String)
-    extends DataWriterFactory {
-  import org.apache.spark.sql.catalyst.InternalRow
-
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      private val open = scala.collection.mutable.LinkedHashMap
-        .empty[String, (String, org.apache.parquet.hadoop.ParquetWriter[InternalRow])]
-
-      override def write(row: InternalRow): Unit = {
-        val sub = router(row)
-        val (_, w) = open.getOrElseUpdate(sub, {
-          val p0 = s"$dataDir/${sub}part-$partitionId-$taskId-" +
-            java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-          (p0, prepared.open(p0))
-        })
-        w.write(row)
-      }
-
-      override def commit(): WriterCommitMessage = {
-        open.values.foreach(_._2.close())
-        LakeBatchFilesMessage(open.values.map(_._1).toSeq)
-      }
-
-      override def abort(): Unit =
-        open.values.foreach { case (path, w) =>
-          w.close()
-          // task-side cleanup with the SAME captured session conf the
-          // writer opened the file with, never a bare Configuration()
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(prepared.hadoopConf).delete(p, false)
-        }
-
-      override def close(): Unit = ()
-    }
 }
 
 /** Adapts a plain file-writer factory to the rows a group-based
@@ -502,75 +393,94 @@ private[graft] object LakeFileStats {
       hist: Map[String, Array[Byte]] = Map.empty)
 
   /** Footer opens performed by [[read]] — the instrumentation hook the
-    * manifest-stats specs pin "zero footer IO during group pruning"
-    * against. Commit-time stats computation counts here too (that IS
-    * a footer read); the specs measure the pruning phase alone. */
+    * manifest-stats specs pin "zero footer IO" against, during group
+    * pruning and during commits (whose stats come from the writers'
+    * own footers, [[ofWritten]], and count nothing here). */
   val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   def read(path: String, conf: org.apache.hadoop.conf.Configuration)
       : FileStats = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
     footerReads.incrementAndGet()
     val r = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(path), conf))
-    try {
-      val blocks = r.getFooter.getBlocks.asScala.toSeq
-      val rowCount = blocks.map(_.getRowCount).sum
-      // per column: merged bounds, summed nulls, and a poison flag for
-      // any block whose non-null range cannot be determined
-      final case class Acc(min: Option[Any], max: Option[Any],
-          nulls: Option[Long], poisoned: Boolean)
-      val acc = scala.collection.mutable.Map.empty[String, Acc]
-      blocks.foreach { b =>
-        b.getColumns.asScala.foreach { c =>
-          if (c.getPath.size == 1) {
-            val name = c.getPath.toDotString
-            val st = c.getStatistics
-            val isString = c.getPrimitiveType.getLogicalTypeAnnotation
-              .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            def norm(v: AnyRef): Option[Any] =
-              c.getPrimitiveType.getPrimitiveTypeName match {
-                case INT32 | INT64 => Some(v.asInstanceOf[Number]
-                  .longValue())
-                case FLOAT | DOUBLE => Some(v.asInstanceOf[Number]
-                  .doubleValue())
-                case BOOLEAN => Some(v.asInstanceOf[java.lang.Boolean]
-                  .booleanValue())
-                case BINARY if isString => Some(
-                  v.asInstanceOf[org.apache.parquet.io.api.Binary]
-                    .toStringUsingUTF8)
-                case _ => None
-              }
-            val nullsB =
-              if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
-              else None
-            val allNull = nullsB.contains(b.getRowCount)
-            val (mnB, mxB) =
-              if (allNull || st == null || !st.hasNonNullValue)
-                (None, None)
-              else (norm(st.genericGetMin.asInstanceOf[AnyRef]),
-                norm(st.genericGetMax.asInstanceOf[AnyRef]))
-            // poisoned: the block HAS non-null rows but no usable range
-            val poisonB = !allNull && (mnB.isEmpty || mxB.isEmpty)
-            val p = acc.getOrElse(name,
-              Acc(None, None, Some(0L), poisoned = false))
-            acc(name) = Acc(
-              pick(p.min, mnB, keepFirst = le),
-              pick(p.max, mxB, keepFirst = ge),
-              for (x <- p.nulls; y <- nullsB) yield x + y,
-              p.poisoned || poisonB)
-          }
+    try fromFooter(r.getFooter)
+    finally r.close()
+  }
+
+  /** Stats of a file from the footer its writer just closed
+    * (`ParquetWriter.getFooter`) — no reopen. The footer takes the
+    * same thrift round trip it takes through the file (statistics
+    * dropped for oversized values, the reader's sort-order checks), so
+    * the result equals [[read]] of the written file. */
+  def ofWritten(footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : FileStats = {
+    val conv = new org.apache.parquet.format.converter
+      .ParquetMetadataConverter()
+    fromFooter(conv.fromParquetMetadata(conv.toParquetMetadata(
+      org.apache.parquet.hadoop.ParquetFileWriter.CURRENT_VERSION,
+      footer)))
+  }
+
+  private def fromFooter(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata)
+      : FileStats = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    val blocks = footer.getBlocks.asScala.toSeq
+    val rowCount = blocks.map(_.getRowCount).sum
+    // per column: merged bounds, summed nulls, and a poison flag for
+    // any block whose non-null range cannot be determined
+    final case class Acc(min: Option[Any], max: Option[Any],
+        nulls: Option[Long], poisoned: Boolean)
+    val acc = scala.collection.mutable.Map.empty[String, Acc]
+    blocks.foreach { b =>
+      b.getColumns.asScala.foreach { c =>
+        if (c.getPath.size == 1) {
+          val name = c.getPath.toDotString
+          val st = c.getStatistics
+          val isString = c.getPrimitiveType.getLogicalTypeAnnotation
+            .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
+          def norm(v: AnyRef): Option[Any] =
+            c.getPrimitiveType.getPrimitiveTypeName match {
+              case INT32 | INT64 => Some(v.asInstanceOf[Number]
+                .longValue())
+              case FLOAT | DOUBLE => Some(v.asInstanceOf[Number]
+                .doubleValue())
+              case BOOLEAN => Some(v.asInstanceOf[java.lang.Boolean]
+                .booleanValue())
+              case BINARY if isString => Some(
+                v.asInstanceOf[org.apache.parquet.io.api.Binary]
+                  .toStringUsingUTF8)
+              case _ => None
+            }
+          val nullsB =
+            if (st != null && st.isNumNullsSet) Some(st.getNumNulls)
+            else None
+          val allNull = nullsB.contains(b.getRowCount)
+          val (mnB, mxB) =
+            if (allNull || st == null || !st.hasNonNullValue)
+              (None, None)
+            else (norm(st.genericGetMin.asInstanceOf[AnyRef]),
+              norm(st.genericGetMax.asInstanceOf[AnyRef]))
+          // poisoned: the block HAS non-null rows but no usable range
+          val poisonB = !allNull && (mnB.isEmpty || mxB.isEmpty)
+          val p = acc.getOrElse(name,
+            Acc(None, None, Some(0L), poisoned = false))
+          acc(name) = Acc(
+            pick(p.min, mnB, keepFirst = le),
+            pick(p.max, mxB, keepFirst = ge),
+            for (x <- p.nulls; y <- nullsB) yield x + y,
+            p.poisoned || poisonB)
         }
       }
-      FileStats(acc.map { case (n, a) =>
-        n -> (if (a.poisoned) ColStats(None, None, a.nulls)
-        else ColStats(a.min, a.max, a.nulls))
-      }.toMap, rowCount)
-    } finally r.close()
+    }
+    FileStats(acc.map { case (n, a) =>
+      n -> (if (a.poisoned) ColStats(None, None, a.nulls)
+      else ColStats(a.min, a.max, a.nulls))
+    }.toMap, rowCount)
   }
 
   private def le(a: Any, b: Any): Boolean = cmp(a, b).exists(_ <= 0)
@@ -608,8 +518,8 @@ private[graft] object LakeFileStats {
   }
 
   /** May any row of the file match `f`? False only on stats PROOF.
-    * A zero-row file (CREATE TABLE's schema bearer, an emptied
-    * snapshot) proves every filter impossible. */
+    * A zero-row file (an older CREATE's empty schema file, a legacy
+    * emptied snapshot) proves every filter impossible. */
   def possible(f: Filter, fs: FileStats): Boolean = {
     if (fs.rowCount == 0L) return false
     def range(a: String): Option[(Any, Any)] =

@@ -654,57 +654,63 @@ private[sources] object GraftLakeMicroBatchStream {
   * `df.writeStream.toTable("lake.ns.t")` with no foreachBatch in
   * sight: the table's Write exposes this through
   * `TableCapability.STREAMING_WRITE`, and each micro-batch commits as
-  * one lake version through the same atomic manifest rename as every
+  * one lake version through the same atomic manifest publish as every
   * batch write. Exactly-once from at-least-once replay is the
   * connector's job here (Delta's transaction-log discipline): the
   * committed snapshot's metadata records `graft.stream.epoch.<queryId>
   * -> epochId`, and a replayed epoch (failure between our commit and
   * the checkpoint's) finds its marker already at-or-past the incoming
   * id and publishes NOTHING — same version, no duplicate rows
-  * (spec-pinned). Executors land parquet via Spark's own row encoder
-  * ([[org.apache.spark.sql.graftbridge.ParquetRowWriterBridge]]) into
-  * a per-epoch staging dir; the epoch commit renames it to a
-  * `files-v<N>-<nonce>` data dir (one metadata op, never a data copy)
-  * and publishes carry-forward, so a streamed table is
-  * indistinguishable from an INSERT-per-batch one — time travel, stats,
-  * change feed, CALL compact all apply. Files open lazily, so an
-  * empty epoch publishes nothing rather than a file per partition. */
+  * (spec-pinned). Executors land parquet through the task-side lake
+  * writer ([[LakeWriter]]) straight into the batch's
+  * `files-v<N>-stream<nonce>` data dir, and the epoch commit publishes
+  * carry-forward from the tasks' messages (paths + footer stats: no
+  * listing, no footer read), so a streamed table is indistinguishable
+  * from an INSERT-per-batch one — time travel, stats, change feed,
+  * CALL compact all apply. Files open lazily, so an empty epoch
+  * publishes nothing rather than a file per partition. */
 private[sources] final class GraftLakeStreamingWrite(dir: String,
     info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
+  import org.apache.spark.sql.connector.write.{PhysicalWriteInfo, WriterCommitMessage}
   import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
   private def spark: SparkSession = SparkSession.active
   private val queryId: String = info.queryId()
   private val epochKey = s"graft.stream.epoch.$queryId"
-  private val stagingRoot =
-    s"$dir/_staging-stream-${queryId.replace("-", "").take(16)}"
+
+  /** The batch's data dir (qualified), named for the version the
+    * epoch expects to commit as when its writer factory is made. */
+  @volatile private var dataDir: String = _
 
   override def createStreamingWriterFactory(
       p: PhysicalWriteInfo): StreamingDataWriterFactory = {
     // PARTITIONED tables stream through the FANOUT writer: each task
     // routes rows into one open file per partition value it sees
-    // (`__graft_part=<v>/` subdirs inside the epoch staging dir — the
-    // same key-claim layout the batch path writes), so a streamed
-    // partitioned table keeps its SPJ/static-prune contract with no
-    // compaction debt beyond file counts
-    val router = LakePartitioning.specOf(spark, dir)
-      .map(LakePartitioning.rowRouter(_, info.schema()))
-    new LakeStreamWriterFactory(stagingRoot,
-      org.apache.spark.sql.graftbridge.ParquetRowWriterBridge
-        .prepare(spark, info.schema()), router)
+    // (`__graft_part=<v>/` subdirs — the same key-claim layout the
+    // batch path writes), so a streamed partitioned table keeps its
+    // SPJ/static-prune contract with no compaction debt beyond file
+    // counts
+    val f = LakeWriter.factory(spark,
+      s"$dir/files-v${VersionedTable.nextVersion(spark, dir)}-" +
+        s"stream${java.util.UUID.randomUUID().toString.take(8)}",
+      info.schema(), LakePartitioning.specOf(spark, dir))
+    dataDir = f.dataDir
+    f
   }
 
   private def fsOf: org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
 
+  private def dropDataDir(): Unit =
+    if (dataDir != null) {
+      fsOf.delete(new org.apache.hadoop.fs.Path(dataDir), true)
+      ()
+    }
+
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val f = fsOf
-    val epochDir = new org.apache.hadoop.fs.Path(
-      stagingRoot, s"epoch-$epochId")
     val latest = VersionedTable.headVersion(spark, dir).getOrElse(
       throw new IllegalStateException(
         s"streaming write into $dir: table vanished mid-stream"))
@@ -713,94 +719,41 @@ private[sources] final class GraftLakeStreamingWrite(dir: String,
     if (already.exists(_ >= epochId)) {
       // replayed epoch (we committed, the checkpoint didn't): the
       // rows are already in version `latest` or earlier — drop the
-      // staged duplicates and publish nothing
-      f.delete(epochDir, true)
+      // rewritten duplicates and publish nothing
+      dropDataDir()
       return
     }
-    val staged =
-      if (!f.exists(epochDir)) Seq.empty
-      else
-        // fanout epochs nest __graft_part*=<v> directory levels
-        LakePartitioning.leafFiles(f, epochDir)
-          .filter(_.getPath.getName.endsWith(".parquet"))
-    if (staged.isEmpty) { f.delete(epochDir, true); return }
+    val written = LakeWriter.files(messages.toSeq)
+    if (written.isEmpty) return
     // next FREE number (branch-staged manifests share the sequence),
-    // content based on the HEAD snapshot resolved above
+    // content based on the HEAD snapshot resolved above. A file's
+    // birth version is its path's, so when another commit claimed the
+    // expected number meanwhile the data dir moves to the one this
+    // epoch actually takes (one metadata op, never a data copy)
     val newV = VersionedTable.nextVersion(spark, dir)
-    val dataDir = s"$dir/files-v$newV-stream" +
-      java.util.UUID.randomUUID().toString.take(8)
-    if (!f.rename(epochDir, new org.apache.hadoop.fs.Path(dataDir)))
-      throw new IllegalStateException(
-        s"failed to stage epoch $epochId of $queryId into $dataDir")
-    val fresh = VersionedTable.listDataFiles(spark, dir, dataDir)
+    val fresh =
+      if (LakePartitioning.fileVersionOfPath(s"$dataDir/").contains(newV))
+        written
+      else {
+        val moved = new org.apache.hadoop.fs.Path(
+          new org.apache.hadoop.fs.Path(dataDir).getParent,
+          s"files-v$newV-stream" +
+            java.util.UUID.randomUUID().toString.take(8)).toString
+        if (!fsOf.rename(new org.apache.hadoop.fs.Path(dataDir),
+            new org.apache.hadoop.fs.Path(moved)))
+          throw new IllegalStateException(
+            s"failed to move epoch $epochId of $queryId into $moved")
+        written.map { case (p, st) => (moved + p.stripPrefix(dataDir), st) }
+      }
     VersionedTable.publishVersion(spark, dir, newV,
-      snap.dataFiles ++ fresh, snap.deleteFiles, snap.stats,
-      snap.meta + (epochKey -> epochId.toString),
-      op = "stream-append")
+      snap.dataFiles ++ fresh.map(_._1), snap.deleteFiles,
+      snap.stats ++ fresh, snap.meta + (epochKey -> epochId.toString),
+      op = "stream-append", written = Some(info.schema()))
     ()
   }
 
   override def abort(epochId: Long,
-      messages: Array[WriterCommitMessage]): Unit = {
-    fsOf.delete(new org.apache.hadoop.fs.Path(
-      stagingRoot, s"epoch-$epochId"), true)
-    ()
-  }
-}
-
-/** Informational only today (commitEpoch lists the staging dir), but
-  * carries EVERY file the task landed so the message never lies if it
-  * becomes authoritative — the batch fanout path's discipline. */
-private final case class LakeFileMessage(paths: Seq[String], rows: Long)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-private final class LakeStreamWriterFactory(stagingRoot: String,
-    prepared: org.apache.spark.sql.graftbridge.ParquetRowWriterBridge.Prepared,
-    router: Option[InternalRow => String] = None)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private def freshPath(sub: String): String =
-        s"$stagingRoot/epoch-$epochId/$sub" +
-          s"part-$partitionId-$taskId-" +
-          java.util.UUID.randomUUID().toString.take(8) + ".parquet"
-
-      // unrouted: at most one lazy writer; routed (partitioned
-      // table): a FANOUT writer per partition value seen by this task
-      private val open = scala.collection.mutable.LinkedHashMap
-        .empty[String, (String, org.apache.parquet.hadoop.ParquetWriter[InternalRow])]
-      private var n = 0L
-
-      override def write(row: InternalRow): Unit = {
-        val key = router.map(_(row)).getOrElse("")
-        val (_, w) = open.getOrElseUpdate(key, {
-          val p = freshPath(key)
-          (p, prepared.open(p)) // lazy: empty task, no file
-        })
-        w.write(row)
-        n += 1
-      }
-
-      override def commit(): WriterCommitMessage = {
-        open.values.foreach(_._2.close())
-        LakeFileMessage(open.values.map(_._1).toSeq, n)
-      }
-
-      override def abort(): Unit = {
-        open.values.foreach { case (path, w) =>
-          w.close()
-          // task-side cleanup with the SAME captured session conf
-          // the writer opened the file with (spark.hadoop.* intact)
-          val p = new org.apache.hadoop.fs.Path(path)
-          p.getFileSystem(prepared.hadoopConf).delete(p, false)
-        }
-      }
-
-      override def close(): Unit = ()
-    }
+      messages: Array[WriterCommitMessage]): Unit = dropDataDir()
 }
 
 /** One whole data file + the position policy to apply: `emitOnly`

@@ -56,25 +56,30 @@ private[graft] object LakeSchema {
       StructType(updated ++ fresh)
   }
 
+  /** The schema a data-landing commit records for the files its
+    * writer wrote: the writer's schema as a parquet read of those files
+    * reports it (every field nullable) — no footer read needed. */
+  def written(schema: StructType): StructType =
+    org.apache.spark.sql.graftbridge.ParquetRowWriterBridge.asRead(schema)
+
   /** The snapshot's physical file-union schema: from the manifest
-    * when recorded (ZERO footer IO), else inferred the legacy way —
-    * `mergeSchema` over all files, or newest-file + widen overrides
-    * on widened tables (schema merging refuses an int/long mix).
-    * Widening applies in BOTH branches: the recorded schema holds
-    * what was physically written, overrides are serve-time. */
+    * when recorded (ZERO footer IO), else [[inferred]]. Widening
+    * overrides apply in BOTH branches: the recorded schema holds what
+    * was physically written, overrides are serve-time. */
   def physicalSchema(spark: SparkSession,
-      snap: VersionedTable.Snapshot): StructType = {
-    val widen = LakeTypeWidening.fromMeta(snap.meta)
-    fromMeta(snap.meta) match {
-      case Some(rec) => LakeTypeWidening.widen(rec, widen)
-      case None if widen.isEmpty =>
-        StructType(spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataFiles: _*).schema.fields)
-      case None =>
-        val newest = snap.dataFiles.maxBy(p =>
-          LakePartitioning.fileVersionOfPath(p).getOrElse(-1))
-        LakeTypeWidening.widen(
-          spark.read.parquet(newest).schema, widen)
-    }
-  }
+      snap: VersionedTable.Snapshot): StructType =
+    LakeTypeWidening.widen(fromMeta(snap.meta).getOrElse(
+      inferred(spark, snap)), LakeTypeWidening.fromMeta(snap.meta))
+
+  /** A legacy snapshot's (no recorded schema) physical schema inferred
+    * from its files — `mergeSchema` over all files, or the newest
+    * file on widened tables (schema merging refuses an int/long mix;
+    * every commit writes the full current schema). */
+  def inferred(spark: SparkSession,
+      snap: VersionedTable.Snapshot): StructType =
+    if (LakeTypeWidening.fromMeta(snap.meta).isEmpty)
+      StructType(spark.read.option("mergeSchema", "true")
+        .parquet(snap.dataFiles: _*).schema.fields)
+    else spark.read.parquet(snap.dataFiles.maxBy(p =>
+      LakePartitioning.fileVersionOfPath(p).getOrElse(-1))).schema
 }

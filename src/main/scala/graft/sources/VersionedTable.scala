@@ -11,11 +11,11 @@ import org.apache.spark.sql.types.StructType
   * `_manifest/<N>.txt` listing EVERY file visible in that snapshot
   * (full-snapshot manifests, not deltas — readers never reconstruct
   * state from a log replay). The manifest is written to a temp name
-  * and RENAMED into place: on HDFS-like stores rename is the atomic
-  * commit point, so a reader either sees version N complete or not at
-  * all — no torn snapshot is observable, and a crashed writer leaves
-  * only an invisible temp file plus orphaned data files that never
-  * became visible.
+  * and published into place only if version N does not exist yet —
+  * an atomic create-if-absent that is the commit point, so a reader
+  * either sees version N complete or not at all — no torn snapshot is
+  * observable, and a crashed writer leaves only an invisible temp file
+  * plus orphaned data files that never became visible.
   *
   * Reads are snapshot-isolated by construction: `read(dir, Some(n))`
   * resolves version n's manifest and scans exactly its files, however
@@ -81,13 +81,13 @@ object VersionedTable {
     })
 
   /** Publish `df` as the EXPLICIT version `v` — the raw commit point,
-    * exposed so the two-committer race is deterministically testable.
+    * exposed so the committer race is deterministically testable.
     * Each attempt writes its data under a nonce-suffixed directory
     * (attempts never collide on the filesystem before the real race),
-    * then the manifest rename decides: Hadoop `rename` refuses an
-    * existing destination, so of two committers publishing the same
-    * version exactly ONE wins and the loser throws
-    * IllegalStateException. The loser's data directory is left behind
+    * then the manifest publish decides ([[publishFile]]: an atomic
+    * create-if-absent), so of any number of committers publishing the
+    * same version exactly ONE wins and every loser throws
+    * IllegalStateException. A loser's data directory is left behind
     * referenced by no manifest — exactly what [[vacuum]] collects. */
   def commitAs(spark: SparkSession, df: DataFrame, dir: String,
       v: Int, carryForward: Boolean = true,
@@ -139,19 +139,19 @@ object VersionedTable {
       else if (applyDeclaredClustering)
         clusterFor(spark, dir, shredded, None)
       else shredded
-    val newFiles = writeDataFiles(spark, out, dir, v, partSpec,
+    val written = writeData(spark, out, dir, v, partSpec,
       if (partSpec.isDefined && applyDeclaredClustering)
         clusteringSpec(spark, dir)
       else None)
+    val newFiles = written.map(_._1)
     // an append on a merge-on-read table carries the DELETE files too —
     // dropping them would resurrect deleted rows. Stats: carried files
-    // keep their manifest stats by reference; only the delta's footers
-    // are read (delta-sized driver IO, once per file per lifetime).
-    // Snapshot metadata (stream epoch markers) carries forward so an
-    // idempotence check survives interleaved non-stream commits.
-    // only the DELTA's footers are read: a pre-stats carried file stays
-    // stats-less (consumers fall back) rather than turning one append
-    // into O(table) footer IO
+    // keep their manifest stats by reference (a pre-stats carried file
+    // stays stats-less; consumers fall back); the delta's stats are
+    // what its write tasks reported from their own footers — the
+    // commit opens no file. Snapshot metadata (stream epoch markers)
+    // carries forward so an idempotence check survives interleaved
+    // non-stream commits.
     // full-replace commits re-earn identity naming: never carry the
     // column-mapping keys into a manifest whose files were rewritten
     // under logical names (compact passes the prior snapshot's meta
@@ -170,20 +170,22 @@ object VersionedTable {
       }
     // SCHEMA IN THE MANIFEST ([[LakeSchema]]): record the snapshot's
     // physical file-union schema — carried ∪ written on appends,
-    // written alone on full replaces. A legacy carry-forward table
-    // (prior files, no recorded schema) stays on inference: recording
-    // just the delta's schema would lose older files' columns.
+    // written alone on full replaces. The written side is the schema
+    // the writer wrote (no footer read), so a commit that lands no
+    // file (CREATE TABLE, ADD COLUMN, an empty append) still records
+    // its columns. A legacy carry-forward table (prior files, no
+    // recorded schema) infers its prior schema once and records the
+    // union from then on.
     val priorRecorded =
-      if (carryForward) LakeSchema.fromMeta(prior.meta) else None
-    val schemaMeta: Map[String, String] =
-      if (carryForward && prior.dataFiles.nonEmpty &&
-          priorRecorded.isEmpty) Map.empty
-      else Map(LakeSchema.toMeta(
-        LakeSchema.merge(priorRecorded, out.schema)))
+      if (!carryForward) None
+      else LakeSchema.fromMeta(prior.meta).orElse(
+        if (prior.dataFiles.isEmpty) None
+        else Some(LakeSchema.inferred(spark, prior)))
+    val schemaMeta = Map(LakeSchema.toMeta(
+      LakeSchema.merge(priorRecorded, LakeSchema.written(out.schema))))
     publish(f, dir, v, prior.dataFiles ++ newFiles, prior.deleteFiles,
-      prior.stats ++ withNdv(spark, dir, newFiles,
-        withBlooms(spark, dir, newFiles,
-          statsFor(spark, newFiles, prior.stats))),
+      prior.stats ++ withNdv(spark, dir, newFiles, out.schema,
+        withBlooms(spark, dir, newFiles, out.schema, written.toMap)),
       prior.meta ++ cleanMeta ++ schemaMeta,
       op.getOrElse(if (carryForward) "append" else "overwrite"),
       base = if (carryForward && base >= 0) Some(base) else None)
@@ -287,128 +289,78 @@ object VersionedTable {
     ranged.sortWithinPartitions(cs: _*)
   }
 
-  /** Land `df` under an immutable nonce data dir for version `v` and
-    * return the fully qualified paths of the parquet files written.
-    * Manifests record FULLY QUALIFIED paths (scheme + authority):
-    * recording only the path component would lose the bucket/namenode
-    * on s3://... or hdfs://nn/... tables and make time-travel reads
-    * resolve against the default filesystem. */
-  private def writeDataFiles(spark: SparkSession, df: DataFrame,
+  /** Land `df` under an immutable nonce data dir for version `v`
+    * through the task-side writer ([[LakeWriter]]) and return each
+    * written file — fully qualified (scheme + authority: recording
+    * only the path component would lose the bucket/namenode on
+    * s3://... or hdfs://nn/... tables and make time-travel reads
+    * resolve against the default filesystem) — with the stats its task
+    * built from the writer's footer. One Spark job; an empty `df`
+    * lands no file. */
+  private def writeData(spark: SparkSession, df: DataFrame,
       dir: String, v: Int,
       partSpec: Option[Seq[LakePartitioning.Spec]] = None,
-      sortSpec: Option[Seq[String]] = None): Seq[String] = {
+      sortSpec: Option[Seq[String]] = None)
+      : Seq[(String, LakeFileStats.FileStats)] = {
     val dataDir = s"$dir/files-v$v-" +
       java.util.UUID.randomUUID().toString.take(8)
-    partSpec match {
-      case None => df.write.parquet(dataDir)
+    val laid = partSpec match {
+      case None => df
       case Some(specs) =>
-        // declared partitioning: route by the transform values and
-        // let `partitionBy` give every data file EXACTLY ONE value
-        // per level, recorded hive-style in its path
-        // (`__graft_part=<v>/…` — the key claims
-        // [[LakeKeyGroupedScan]] groups on). The routing columns are
-        // consumed by partitionBy and never land in file bytes. One
-        // shuffle: repartition on the routing values (bounded at the
-        // bucket-count product for all-bucket specs), plus an
-        // optional within-partition sort when clustering is also
-        // declared.
+        // declared partitioning: the writer routes every row into its
+        // partition value's `__graft_part=<v>/…` claim dir (the key
+        // [[LakeKeyGroupedScan]] groups on), so every data file holds
+        // EXACTLY ONE value per level; the routing values live in
+        // paths, never in file bytes. One shuffle on the routing
+        // values (bounded at the bucket-count product for all-bucket
+        // specs) keeps each task's fanout narrow, plus a
+        // within-partition sort when clustering is also declared —
+        // each file is a subsequence of its task's sorted rows, so it
+        // is genuinely ordered by the cluster terms (the invariant the
+        // scan-reported ordering claims).
         require(!df.columns.exists(
           _.toLowerCase.startsWith(LakePartitioning.PartColPrefix)),
           s"column prefix ${LakePartitioning.PartColPrefix} is " +
             "reserved by declared table partitioning")
-        val names = specs.indices.map(LakePartitioning.partCol)
-        val routed = specs.zip(names).foldLeft(df) {
-          case (d, (spec, name)) =>
-            d.withColumn(name, LakePartitioning.routeColumn(spec, df))
-        }
-        val routeCols = names
-          .map(org.apache.spark.sql.functions.col)
+        val routeCols = specs.map(LakePartitioning.routeColumn(_, df))
         val buckets = specs.collect {
           case LakePartitioning.BucketSpec(n, _) => n }
         val shuffled =
           if (buckets.size == specs.size)
-            routed.repartition(buckets.product, routeCols: _*)
-          else routed.repartition(routeCols: _*)
-        val sorted = sortSpec match {
-          // route cols FIRST: the V1 file writer requires its input
-          // sorted by the partition columns and would insert its own
-          // (cluster-order-destroying) sort otherwise; with the
-          // routing prefix the write is sort-free AND every emitted
-          // file is genuinely ordered by the cluster terms — the
-          // invariant the scan-reported ordering claims
-          case Some(s) => shuffled.sortWithinPartitions(
-            (routeCols ++ clusterColumns(s, routed)): _*)
+            df.repartition(buckets.product, routeCols: _*)
+          else df.repartition(routeCols: _*)
+        sortSpec match {
+          case Some(s) =>
+            shuffled.sortWithinPartitions(clusterColumns(s, df): _*)
           case None => shuffled
         }
-        sorted.write.partitionBy(names: _*).parquet(dataDir)
-        // an EMPTY partitioned write lands no parquet file at all —
-        // CREATE TABLE's schema carrier would vanish. Land the plain
-        // empty schema file instead (0 rows: no key claim needed, the
-        // key-grouped scan drops proven-empty files).
-        if (listDataFiles(spark, dir, dataDir).isEmpty)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](),
-            df.schema).coalesce(1).write.mode("overwrite").parquet(dataDir)
     }
-    listDataFiles(spark, dir, dataDir)
+    LakeWriter.write(laid, dataDir, partSpec)
   }
 
   /** Publish an explicit file list as version `v` — the manifest-only
-    * commit point for writers that land their data files through
-    * Spark's own V2 file write (the lake catalog's row-level
-    * operations) rather than [[writeDataFiles]]. Same atomic rename,
-    * same loser-throws race semantics. `knownStats` carries prior
-    * manifests' per-file stats forward; files not covered (the fresh
-    * ones) get their footers read once here. */
+    * commit point of writers whose data files their own write tasks
+    * landed and reported ([[LakeWriter]]: row-level rewrites, stream
+    * epochs) and of metadata-only commits. `stats` may hold more than
+    * the listed files (only theirs are written): carried files keep
+    * their prior stats by reference and fresh files bring the stats
+    * their writer built from its footer — nothing is opened here.
+    * When the snapshot records its schema, the writer's schema
+    * `written` unions into it. Same atomic publish, same loser-throws
+    * race semantics. */
   private[sources] def publishVersion(spark: SparkSession, dir: String,
       v: Int, files: Seq[String], deletes: Seq[String] = Seq.empty,
-      knownStats: Map[String, LakeFileStats.FileStats] = Map.empty,
+      stats: Map[String, LakeFileStats.FileStats] = Map.empty,
       meta: Map[String, String] = Map.empty,
-      op: String = "write"): Int = {
-    // SCHEMA IN THE MANIFEST ([[LakeSchema]]): carried recorded
-    // schema unions with the FRESH files' physical schema (row-level
-    // rewrites materialize lineage columns; the union must learn
-    // them). One delta-scoped schema read — the fresh files' footers
-    // are being read for stats in this same commit anyway. Tables
-    // without a recorded schema stay on inference.
+      op: String = "write", written: Option[StructType] = None): Int = {
     val schemaMeta: Map[String, String] =
-      LakeSchema.fromMeta(meta) match {
-        case Some(rec) =>
-          val fresh = files.filterNot(knownStats.contains)
-          if (fresh.isEmpty) Map.empty
-          else Map(LakeSchema.toMeta(LakeSchema.merge(Some(rec),
-            StructType(spark.read.option("mergeSchema", "true")
-              .parquet(fresh: _*).schema.fields
-              // hive-style partition discovery over routed rewrite
-              // dirs (__graft_part*=v/...) must not leak the routing
-              // columns into the recorded schema — they live in
-              // paths, not file bytes
-              .filterNot(_.name.toLowerCase.startsWith(
-                LakePartitioning.PartColPrefix))))))
-        case None => Map.empty
+      (LakeSchema.fromMeta(meta), written) match {
+        case (Some(rec), Some(w)) => Map(LakeSchema.toMeta(
+          LakeSchema.merge(Some(rec), LakeSchema.written(w))))
+        case _ => Map.empty
       }
-    publish(fs(spark, dir), dir, v, files, deletes,
-      statsFor(spark, files ++ deletes, knownStats),
+    publish(fs(spark, dir), dir, v, files, deletes, stats,
       meta ++ schemaMeta, op)
-  }
-
-  /** Per-file stats for the manifest: `known` entries ride along
-    * untouched (carry-forward files never re-open); uncovered files
-    * read their footer ONCE here — the commit-time stats write that
-    * every later group prune / bounds probe / `versions` row reads
-    * back for free. Best-effort per file: an unreadable footer (foreign
-    * format, corrupt) just omits that file's stats, and every consumer
-    * treats missing stats conservatively. */
-  private def statsFor(spark: SparkSession, files: Seq[String],
-      known: Map[String, LakeFileStats.FileStats])
-      : Map[String, LakeFileStats.FileStats] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    files.flatMap { p =>
-      known.get(p).orElse {
-        try Some(LakeFileStats.read(p, conf))
-        catch { case scala.util.control.NonFatal(_) => None }
-      }.map(p -> _)
-    }.toMap
   }
 
   /** MANIFEST BLOOM FILTERS: when the table declares
@@ -422,26 +374,28 @@ object VersionedTable {
     * `graft.bloom.bits` (default 65536 = 8 KiB/file/col in the
     * manifest, ~1% FP at 5k distinct keys). Files landed by row-level
     * rewrites carry no bloom (kept conservatively) until compaction
-    * re-earns them. */
+    * re-earns them. Declared columns are checked against the commit's
+    * written `schema` even when it lands no file (CREATE refuses an
+    * unsupported declaration). */
   private def withBlooms(spark: SparkSession, dir: String,
-      files: Seq[String], stats: Map[String, LakeFileStats.FileStats])
+      files: Seq[String], schema: StructType,
+      stats: Map[String, LakeFileStats.FileStats])
       : Map[String, LakeFileStats.FileStats] = {
     import org.apache.spark.sql.functions.col
     val props = GraftLakeTable.readProperties(spark, dir)
     val declared = Option(props.get("graft.bloom.columns"))
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
-    if (declared.isEmpty || files.isEmpty) return stats
+    if (declared.isEmpty) return stats
     val mBits = Option(props.get("graft.bloom.bits"))
       .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(65536)
     require(mBits > 0 && mBits % 8 == 0,
       s"graft.bloom.bits must be a positive multiple of 8, got $mBits")
-    val df = spark.read.option("mergeSchema", "true").parquet(files: _*)
     val cols = declared.map { c =>
-      val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
+      val f = schema.fields.find(_.name.equalsIgnoreCase(c))
         .getOrElse(throw new IllegalArgumentException(
           s"graft.bloom.columns names '$c', absent from the commit " +
-            s"schema ${df.columns.mkString("(", ",", ")")}"))
+            s"schema ${schema.fieldNames.mkString("(", ",", ")")}"))
       f.dataType match {
         case org.apache.spark.sql.types.ByteType |
              org.apache.spark.sql.types.ShortType |
@@ -453,6 +407,8 @@ object VersionedTable {
             s"'$c' is ${other.catalogString}")
       }
     }
+    if (files.isEmpty) return stats
+    val df = spark.read.schema(schema).parquet(files: _*)
     // string keys enter the bitset through the engine-agnostic
     // PolyHashMod (base-31 codepoint polynomial mod 2^31-1 — the same
     // hash the bucket transform and the read-side probe use)
@@ -495,7 +451,8 @@ object VersionedTable {
     * flip correctly (spec- and gate-pinned). Strings enter the sketch
     * through the engine-agnostic [[graft.functions.PolyHashMod]]. */
   private def withNdv(spark: SparkSession, dir: String,
-      files: Seq[String], stats: Map[String, LakeFileStats.FileStats])
+      files: Seq[String], schema: StructType,
+      stats: Map[String, LakeFileStats.FileStats])
       : Map[String, LakeFileStats.FileStats] = {
     import org.apache.spark.sql.functions.col
     val props = GraftLakeTable.readProperties(spark, dir)
@@ -508,14 +465,12 @@ object VersionedTable {
     val histDeclared = Option(props.get("graft.histogram.columns"))
       .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(Seq.empty)
-    if ((declared.isEmpty && histDeclared.isEmpty) || files.isEmpty)
-      return stats
-    val df = spark.read.option("mergeSchema", "true").parquet(files: _*)
+    if (declared.isEmpty && histDeclared.isEmpty) return stats
     val cols = declared.map { c =>
-      val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
+      val f = schema.fields.find(_.name.equalsIgnoreCase(c))
         .getOrElse(throw new IllegalArgumentException(
           s"graft.ndv.columns names '$c', absent from the commit " +
-            s"schema ${df.columns.mkString("(", ",", ")")}"))
+            s"schema ${schema.fieldNames.mkString("(", ",", ")")}"))
       f.dataType match {
         case org.apache.spark.sql.types.ByteType |
              org.apache.spark.sql.types.ShortType |
@@ -528,10 +483,10 @@ object VersionedTable {
       }
     }
     val histCols = histDeclared.map { c =>
-      val f = df.schema.fields.find(_.name.equalsIgnoreCase(c))
+      val f = schema.fields.find(_.name.equalsIgnoreCase(c))
         .getOrElse(throw new IllegalArgumentException(
           s"graft.histogram.columns names '$c', absent from the " +
-            s"commit schema ${df.columns.mkString("(", ",", ")")}"))
+            s"commit schema ${schema.fieldNames.mkString("(", ",", ")")}"))
       f.dataType match {
         case _: org.apache.spark.sql.types.NumericType => f
         case other => throw new IllegalArgumentException(
@@ -539,6 +494,8 @@ object VersionedTable {
             s"'$c' is ${other.catalogString}")
       }
     }
+    if (files.isEmpty) return stats
+    val df = spark.read.schema(schema).parquet(files: _*)
     val aggs = cols.map { f =>
       val key = f.dataType match {
         case org.apache.spark.sql.types.StringType =>
@@ -623,20 +580,8 @@ object VersionedTable {
     }.toMap
   }
 
-  /** Fully qualified parquet paths under a landed data directory. */
-  private[sources] def listDataFiles(spark: SparkSession, dir: String,
-      dataDir: String): Seq[String] = {
-    val f = fs(spark, dir)
-    // partitioned commits nest hive-style `__graft_part*=<v>`
-    // directory levels; flat and partitioned layouts never mix within
-    // one landed data dir
-    LakePartitioning.leafFiles(f, new Path(dataDir))
-      .filter(s => s.getPath.getName.endsWith(".parquet"))
-      .map(s => f.makeQualified(s.getPath).toString)
-  }
-
-  /** Write + atomically rename a manifest: version `v` exists iff the
-    * rename landed. Shared by [[commitAs]] and [[shallowClone]].
+  /** Write + atomically publish a manifest ([[publishFile]]): version
+    * `v` exists iff the publish landed. Every commit path ends here.
     *
     * Line format (backward compatible — pre-stats manifests parse
     * unchanged):
@@ -648,7 +593,7 @@ object VersionedTable {
     *    file;
     *  - `M <key>=<value>` — snapshot metadata (streaming epoch
     *    markers, clustering declarations), atomic WITH the commit
-    *    because it rides the same rename.
+    *    because it rides the same publish.
     *
     * `op` is the commit's OPERATION label (`M graft.op=<op>` — the
     * Delta DESCRIBE HISTORY discipline): carried metadata persists
@@ -670,8 +615,6 @@ object VersionedTable {
         LakeRowLineage.assignRowIds(files, stats0, meta0)
       else (stats0, meta0)
     f.mkdirs(manifestDir(dir))
-    val tmp = new Path(manifestDir(dir), s".$v.txt.tmp")
-    val out = f.create(tmp, true)
     def line(p: String): String =
       stats.get(p).map(s => s"$p\t${LakeFileStats.toJson(s)}")
         .getOrElse(p)
@@ -704,12 +647,33 @@ object VersionedTable {
     }
     val text = LakeManifest.plan(f, dir, baseRaw, v, metaLines,
       files.map(line), deletes.map(line))
-    try out.write(text.getBytes("UTF-8"))
-    finally out.close()
-    if (!f.rename(tmp, new Path(manifestDir(dir), s"$v.txt")))
+    if (!publishFile(f, new Path(manifestDir(dir), s"$v.txt"), text))
       throw new IllegalStateException(
         s"versioned commit $v lost the publish race at $dir")
     v
+  }
+
+  /** THE COMMIT POINT: write `text` to a temp file private to this
+    * attempt, then publish it at `dst` only if `dst` does not exist —
+    * decided atomically by the filesystem, so of any number of racing
+    * publishers exactly one wins and the winner's bytes are never
+    * replaced. Local tables publish by hard link (the link syscall
+    * refuses an existing name); other filesystems by `rename`, which
+    * refuses an existing destination on HDFS-like stores. Returns
+    * false when `dst` already existed. */
+  private def publishFile(f: FileSystem, dst: Path, text: String): Boolean = {
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp-" +
+      java.util.UUID.randomUUID().toString.take(8))
+    val out = f.create(tmp, true)
+    try out.write(text.getBytes("UTF-8"))
+    finally out.close()
+    val won = f match {
+      case local: org.apache.hadoop.fs.LocalFileSystem =>
+        FastLocalFileSystem.publish(local, tmp, dst)
+      case _ => f.rename(tmp, dst)
+    }
+    if (!won) f.delete(tmp, false)
+    won
   }
 
   /** Zero-copy SHALLOW CLONE (Delta's CLONE): publish at `dstDir` a new
@@ -778,8 +742,8 @@ object VersionedTable {
   // against [[vacuum]] — the governance primitive for "the snapshot we
   // trained the model on stays reproducible" without freezing the
   // whole history. Stored one file per tag under `_refs/` with the
-  // same tmp+rename publish discipline as manifests: creating a tag
-  // that exists loses the rename race and throws, so tags are
+  // same atomic publish as manifests ([[publishFile]]): creating a tag
+  // that exists loses the publish race and throws, so tags are
   // immutable once published (drop + recreate to move — an explicit,
   // auditable act).
 
@@ -797,17 +761,10 @@ object VersionedTable {
     // the tag must reference a still-serveable snapshot
     snapshotOf(spark, dir, version)
     f.mkdirs(refsDir(dir))
-    val tmp = new Path(refsDir(dir),
-      s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
-    try out.write(s"$version\n".getBytes("UTF-8"))
-    finally out.close()
-    if (!f.rename(tmp, new Path(refsDir(dir), name))) {
-      f.delete(tmp, false)
+    if (!publishFile(f, new Path(refsDir(dir), name), s"$version\n"))
       throw new IllegalStateException(
         s"tag '$name' already exists at $dir (tags are immutable; " +
           "drop it first to retarget)")
-    }
   }
 
   /** Returns true iff the tag existed. */
@@ -824,7 +781,7 @@ object VersionedTable {
   // publishes the audited branch snapshot as the next MAIN version by
   // reference (zero data copied — a manifest write, like [[restore]]).
   // This is the write-audit-publish contract: stage, inspect by name,
-  // then make it the table in one atomic manifest rename. Branch refs
+  // then make it the table in one atomic manifest publish. Branch refs
   // share the `_refs/` store with tags (payload `branch:<v>` vs a
   // tag's bare int, so each listing ignores the other kind).
 
@@ -848,7 +805,7 @@ object VersionedTable {
       .find(v => !snapshotOf(spark, dir, v).meta.contains(BranchMetaKey))
   }
 
-  /** The next free version number (manifest renames make claiming it
+  /** The next free version number (manifest publishes make claiming it
     * atomic); branch-staged manifests count — version numbers are a
     * single sequence across main and branches. */
   private[sources] def nextVersion(spark: SparkSession, dir: String): Int =
@@ -861,18 +818,12 @@ object VersionedTable {
     val f = fs(spark, dir)
     snapshotOf(spark, dir, version) // must reference a serveable snapshot
     f.mkdirs(refsDir(dir))
-    val tmp = new Path(refsDir(dir),
-      s".$name.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = f.create(tmp, true)
     // head@base: the fork point rides in the ref so [[fastForward]]
     // can verify main has not diverged since the branch was cut
-    try out.write(s"branch:$version@$version\n".getBytes("UTF-8"))
-    finally out.close()
-    if (!f.rename(tmp, new Path(refsDir(dir), name))) {
-      f.delete(tmp, false)
+    if (!publishFile(f, new Path(refsDir(dir), name),
+        s"branch:$version@$version\n"))
       throw new IllegalStateException(
         s"ref '$name' already exists at $dir")
-    }
   }
 
   /** Advance an existing branch ref. Not atomic against a concurrent
@@ -942,7 +893,7 @@ object VersionedTable {
 
   /** PUBLISH a branch to main: re-publish the branch head's snapshot
     * (files, delete files, stats, metadata minus the branch label) as
-    * the next MAIN version — zero data copied, one manifest rename,
+    * the next MAIN version — zero data copied, one manifest publish,
     * exactly [[restore]]'s shape. TRUE fast-forward only (Iceberg's
     * fast_forward contract): if main advanced past the branch's fork
     * point, publishing would silently DISCARD those main commits, so
@@ -1039,7 +990,7 @@ object VersionedTable {
   }
 
   /** Parsed-snapshot cache. A published manifest is IMMUTABLE (the
-    * rename commit point refuses an existing destination), so a parsed
+    * publish commit point refuses an existing destination), so a parsed
     * [[Snapshot]] is valid for as long as the file exists unchanged —
     * keyed on (qualified path, mtime, length) to stay correct under
     * test-harness rewrites and table relocation. Planning a query
@@ -1098,14 +1049,11 @@ object VersionedTable {
   def filesOf(spark: SparkSession, dir: String, version: Int): Seq[String] =
     snapshotOf(spark, dir, version).dataFiles
 
-  /** Snapshot read: `version = None` reads the latest commit.
-    * `mergeSchema` is on: a carry-forward commit may WIDEN the schema
-    * (the additive column evolution every long-lived table undergoes),
-    * and Spark's default single-footer sampling would silently drop
-    * the new column when an old file is sampled — with the merge, old
-    * files surface the added columns as nulls, exactly the lakehouse
-    * evolution contract. Cost is one footer read per file at planning,
-    * which the manifest's explicit file list already bounds. */
+  /** Snapshot read: `version = None` reads the latest commit, under
+    * the snapshot's physical schema ([[scan]]): a carry-forward commit
+    * may WIDEN the schema (the additive column evolution every
+    * long-lived table undergoes), and old files surface the added
+    * columns as nulls — exactly the lakehouse evolution contract. */
   def read(spark: SparkSession, dir: String,
       version: Option[Int] = None): DataFrame =
     readImpl(spark, dir, version, keepLineage = false)
@@ -1115,46 +1063,7 @@ object VersionedTable {
     val v = version.orElse(headVersion(spark, dir)).getOrElse(
       throw new IllegalArgumentException(s"no committed version at $dir"))
     val snap = snapshotOf(spark, dir, v)
-    val widen = LakeTypeWidening.fromMeta(snap.meta)
-    val defaults = LakeDefaults.fromMeta(snap.meta)
-    val data =
-      if (widen.isEmpty && defaults.isEmpty)
-        spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataFiles: _*)
-      else if (widen.isEmpty) {
-        // DEFAULT columns ride the requested schema's resolver
-        // metadata: files that physically lack the column backfill
-        // the declared constant, files written after the add serve
-        // their stored values ([[LakeDefaults]])
-        val merged = spark.read.option("mergeSchema", "true")
-          .parquet(snap.dataFiles: _*).schema
-        spark.read.schema(LakeDefaults.enrich(merged, defaults))
-          .parquet(snap.dataFiles: _*)
-      } else {
-        // widened snapshot: explicit wide schema (merging refuses the
-        // narrow/wide file mix; the readers upcast natively). Newest
-        // file carries the full column set — commits write the full
-        // current schema.
-        val newest = snap.dataFiles.maxBy(p =>
-          LakePartitioning.fileVersionOfPath(p).getOrElse(-1))
-        val wide = LakeTypeWidening.widen(
-          spark.read.parquet(newest).schema, widen)
-        // lineage-materializing reads must see the hidden physical
-        // columns even when the NEWEST file (a fresh append) lacks
-        // them — older rewritten files still carry ids
-        val pinned =
-          if (keepLineage && snap.stats.valuesIterator.exists(
-              _.cols.contains(LakeRowLineage.PhysRowId)) &&
-              !wide.fieldNames.exists(_.equalsIgnoreCase(
-                LakeRowLineage.PhysRowId)))
-            wide.add(LakeRowLineage.PhysRowId,
-                org.apache.spark.sql.types.LongType)
-              .add(LakeRowLineage.PhysLastUpd,
-                org.apache.spark.sql.types.IntegerType)
-          else wide
-        spark.read.schema(LakeDefaults.enrich(pinned, defaults))
-          .parquet(snap.dataFiles: _*)
-      }
+    val data = scan(spark, snap, snap.dataFiles, keepLineage)
     val (eqDels, posDels) = snap.deleteFiles.partition(isEqualityDelete)
     // lineage-materializing reads (the facade rewrites' input —
     // compact, COW-delete survivors) compute the hidden physical
@@ -1218,21 +1127,31 @@ object VersionedTable {
       LakeRowLineage.PhysLastUpd)
   }
 
-  /** Raw merged read of (a subset of) a snapshot's data files with
-    * declared DEFAULT columns enriched ([[LakeDefaults]]) — condition
+  /** Raw read of (a subset of) a snapshot's data files under the
+    * snapshot's physical schema ([[LakeSchema.physicalSchema]]: the
+    * recorded one, zero footer IO — a file lacking a column reads it
+    * as null, and a snapshot with no files reads empty), with declared
+    * DEFAULT columns enriched ([[LakeDefaults]]) — condition
     * evaluation in the rewrite paths must see backfilled values, not
-    * the nulls a plain merged read serves for old files. */
-  private def rawDefaulted(spark: SparkSession, snap: Snapshot,
-      files: Seq[String]): DataFrame = {
-    val defaults = LakeDefaults.fromMeta(snap.meta)
-    if (defaults.isEmpty)
-      spark.read.option("mergeSchema", "true").parquet(files: _*)
-    else {
-      val merged = spark.read.option("mergeSchema", "true")
-        .parquet(files: _*).schema
-      spark.read.schema(LakeDefaults.enrich(merged, defaults))
-        .parquet(files: _*)
-    }
+    * the nulls a plain read serves for old files. `keepLineage` pins
+    * the hidden lineage columns into the schema whenever some file
+    * materialized them (lineage-materializing reads must see them even
+    * when the schema source lacks them). */
+  private def scan(spark: SparkSession, snap: Snapshot,
+      files: Seq[String], keepLineage: Boolean = false): DataFrame = {
+    val physical = LakeSchema.physicalSchema(spark, snap)
+    val pinned =
+      if (keepLineage && snap.stats.valuesIterator.exists(
+          _.cols.contains(LakeRowLineage.PhysRowId)) &&
+          !physical.fieldNames.exists(_.equalsIgnoreCase(
+            LakeRowLineage.PhysRowId)))
+        physical.add(LakeRowLineage.PhysRowId,
+            org.apache.spark.sql.types.LongType)
+          .add(LakeRowLineage.PhysLastUpd,
+            org.apache.spark.sql.types.IntegerType)
+      else physical
+    spark.read.schema(LakeDefaults.enrich(pinned,
+      LakeDefaults.fromMeta(snap.meta))).parquet(files: _*)
   }
 
   /** Lineage enabled for this table (property or an already-assigned
@@ -1317,8 +1236,7 @@ object VersionedTable {
     val newV = nextVersion(spark, dir)
     val written = writeEqDeleteFile(spark, dir, newV, keys)
     publish(fs(spark, dir), dir, newV, snap.dataFiles,
-      snap.deleteFiles ++ written.map(_._1),
-      snap.stats ++ written.toMap.map { case (p, s) => p -> s },
+      snap.deleteFiles ++ written.map(_._1), snap.stats ++ written,
       snap.meta, op = "delete")
   }
 
@@ -1357,18 +1275,16 @@ object VersionedTable {
         LakeJsonShred.shred(batch, src, paths)
       case _ => batch
     }
-    val dataFiles = writeDataFiles(spark, shredded, dir, newV,
+    val dataFiles = writeData(spark, shredded, dir, newV,
       LakePartitioning.specOf(spark, dir))
     publish(fs(spark, dir), dir, newV,
-      snap.dataFiles ++ dataFiles,
+      snap.dataFiles ++ dataFiles.map(_._1),
       snap.deleteFiles ++ eqWritten.map(_._1),
-      snap.stats ++ statsFor(spark, dataFiles, Map.empty) ++
-        eqWritten.toMap.map { case (p, s) => p -> s },
-      snap.meta, op = "upsert")
+      snap.stats ++ dataFiles ++ eqWritten, snap.meta, op = "upsert")
   }
 
-  /** Validate + land one equality-delete file for version `v`; empty
-    * key sets land nothing (the publish stays mask-free). Validation
+  /** Validate + land one equality-delete file for version `v`; an
+    * empty key set lands nothing (the publish stays mask-free). Validation
     * samples the NEWEST data file's footer (one metadata read — the
     * write path must stay O(batch), never O(table)); commits always
     * land the full current schema, so the newest file carries every
@@ -1407,12 +1323,8 @@ object VersionedTable {
     }
     val nonce = java.util.UUID.randomUUID().toString
       .replaceAll("[^0-9a-f]", "").take(8)
-    val eqDir = s"$dir/files-v$v-eq$nonce"
-    keys.distinct().repartition(1).write.parquet(eqDir)
-    val written = listDataFiles(spark, dir, eqDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val stats = written.map(p => p -> LakeFileStats.read(p, conf))
-    if (stats.forall(_._2.rowCount == 0L)) Seq.empty else stats
+    LakeWriter.write(keys.distinct().repartition(1),
+      s"$dir/files-v$v-eq$nonce", None)
   }
 
   /** MERGE-ON-READ DELETE (Iceberg v2 positional deletes / Delta
@@ -1452,7 +1364,7 @@ object VersionedTable {
     // (the delete-file OUTPUT schema still uses the public names).
     val (eqDels, posDels) = snap.deleteFiles.partition(isEqualityDelete)
     val data = applyEqDeletes(spark,
-      rawDefaulted(spark, snap, snap.dataFiles)
+      scan(spark, snap, snap.dataFiles)
         .withColumn("__graft_fp", col("_metadata.file_path"))
         .withColumn("__graft_ri", col("_metadata.row_index")),
       eqDels, col("__graft_fp"))
@@ -1470,21 +1382,13 @@ object VersionedTable {
       .select(col("__graft_fp").as("file_path"),
         col("__graft_ri").as("row_index"))
       .repartition(1)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = s"$dir/files-v$newV-$nonce"
-    positions.write.parquet(delDir)
-    val written = listDataFiles(spark, dir, delDir)
-    // a no-match delete publishes a (mask-identical) version without
-    // referencing the empty file; emptiness comes from the stats read
-    // the manifest needs anyway (one footer open per written file)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val writtenStats = written.map(p => p -> LakeFileStats.read(p, conf))
-    val newDeletes =
-      if (writtenStats.forall(_._2.rowCount == 0L)) Seq.empty[String]
-      else written
+    // a no-match delete lands no file and publishes a (mask-identical)
+    // version
+    val written = LakeWriter.write(positions,
+      s"$dir/files-v$newV-${java.util.UUID.randomUUID().toString.take(8)}",
+      None)
     publish(fs(spark, dir), dir, newV, snap.dataFiles,
-      snap.deleteFiles ++ newDeletes,
-      snap.stats ++ writtenStats.filter(ws => newDeletes.contains(ws._1)),
+      snap.deleteFiles ++ written.map(_._1), snap.stats ++ written,
       snap.meta, op = "delete")
   }
 
@@ -1515,8 +1419,7 @@ object VersionedTable {
     // raw scan with (file, position); rows ALREADY positionally
     // masked need no re-recording (apply is idempotent, but the fold
     // should stay matches-sized) — subtract the existing masks first
-    val tagged = spark.read.option("mergeSchema", "true")
-      .parquet(snap.dataFiles: _*)
+    val tagged = scan(spark, snap, snap.dataFiles)
       .withColumn("__graft_fp", col("_metadata.file_path"))
       .withColumn("__graft_ri", col("_metadata.row_index"))
     val live =
@@ -1540,19 +1443,11 @@ object VersionedTable {
         .select(col("__graft_fp").as("file_path"),
           col("__graft_ri").as("row_index"))
     }.reduce(_ unionAll _).distinct().repartition(1)
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val delDir = s"$dir/files-v$newV-$nonce"
-    positions.write.parquet(delDir)
-    val written = listDataFiles(spark, dir, delDir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val writtenStats = written.map(p => p -> LakeFileStats.read(p, conf))
-    val newDeletes =
-      if (writtenStats.forall(_._2.rowCount == 0L)) Seq.empty[String]
-      else written
+    val written = LakeWriter.write(positions,
+      s"$dir/files-v$newV-${java.util.UUID.randomUUID().toString.take(8)}",
+      None)
     publish(fs(spark, dir), dir, newV, snap.dataFiles,
-      posDels ++ newDeletes,
-      (snap.stats -- eqDels) ++
-        writtenStats.filter(ws => newDeletes.contains(ws._1)),
+      posDels ++ written.map(_._1), (snap.stats -- eqDels) ++ written,
       snap.meta, op = "convert_deletes")
   }
 
@@ -1921,7 +1816,7 @@ object VersionedTable {
     * On a 100 TB table a delete touching 0.1% of files costs two scans
     * of that 0.1% (find + rewrite) plus a manifest write — never a
     * table rewrite. The commit publishes through the same atomic
-    * manifest rename as every other write; prior snapshots keep
+    * manifest publish as every other write; prior snapshots keep
     * serving the deleted rows (time travel), and [[vacuum]] reclaims
     * the replaced files once retention passes. A no-match delete still
     * publishes a (file-identical) version, so DML always advances the
@@ -1953,7 +1848,7 @@ object VersionedTable {
         publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
           op = "delete"),
         0L, 0, 0)
-    val snap = rawDefaulted(spark, prior, files)
+    val snap = scan(spark, prior, files)
     val perFile = snap.filter(cond)
       .groupBy(col("_metadata.file_path").as("fp"))
       .agg(count(lit(1)).as("n"))
@@ -1966,7 +1861,7 @@ object VersionedTable {
         publish(f, dir, newV, files, Seq.empty, prior.stats, prior.meta,
           op = "delete"),
         0L, 0, files.size)
-    val rawTouched = rawDefaulted(spark, prior, touched)
+    val rawTouched = scan(spark, prior, touched)
     // lineage tables: survivors of the COW rewrite carry their
     // materialized identity into the replacement files
     val linTouched =
@@ -1978,18 +1873,17 @@ object VersionedTable {
       .filter(not(coalesce(cond, lit(false))))
     // a partitioned table's survivors re-route so the rewrite keeps
     // every file's key claim (the SPJ layout survives COW deletes)
-    val newFiles = writeDataFiles(spark, survivors, dir, newV,
+    val newFiles = writeData(spark, survivors, dir, newV,
       LakePartitioning.specOf(spark, dir))
-    publish(f, dir, newV, kept ++ newFiles, Seq.empty,
-      prior.stats.view.filterKeys(kept.toSet).toMap ++
-        statsFor(spark, newFiles, Map.empty),
+    publish(f, dir, newV, kept ++ newFiles.map(_._1), Seq.empty,
+      prior.stats.view.filterKeys(kept.toSet).toMap ++ newFiles,
       prior.meta, op = "delete")
     DeleteResult(newV, perFile.values.sum, touched.size, kept.size)
   }
 
   /** TRUNCATE: publish an empty snapshot that PRESERVES the current
-    * schema (one schema-bearing empty parquet file) — no data scan at
-    * all, unlike a delete-everything. Prior versions keep serving. */
+    * schema (recorded in the manifest; no file lands) — no data scan
+    * at all, unlike a delete-everything. Prior versions keep serving. */
   def truncate(spark: SparkSession, dir: String): Int =
     commit(spark, read(spark, dir).limit(0), dir, carryForward = false,
       op = Some("truncate"))
@@ -2013,10 +1907,10 @@ object VersionedTable {
     * window): a data directory whose newest entry is younger than the
     * grace is SKIPPED even when no retained manifest references it,
     * because an in-flight [[commitAs]] writes its nonce data dir FIRST
-    * and only then renames its manifest into visibility — without the
+    * and only then publishes its manifest into visibility — without the
     * grace, a vacuum racing that gap deletes files the about-to-publish
     * manifest references, leaving a snapshot that fails mid-scan. The
-    * default (15 min) comfortably covers a commit's write-to-rename
+    * default (15 min) comfortably covers a commit's write-to-publish
     * window; tests and single-writer callers pass 0 explicitly. */
   def vacuum(spark: SparkSession, dir: String, keep: Int,
       graceMs: Long = DefaultVacuumGraceMs,

@@ -2,29 +2,30 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Executor-side single-file parquet `InternalRow` writer — the
-  * missing piece for a NATIVE DSv2 `StreamingWrite` over a file-backed
-  * table: Spark's own streaming file path still rides the V1 `Sink`
-  * (FileStreamSink), so a connector exposing
-  * `TableCapability.STREAMING_WRITE` has to land parquet itself.
-  * This bridge reuses Spark's [[ParquetWriteSupport]] (the exact
-  * row-to-parquet encoder every batch write uses — same physical
-  * layout, timestamps, rebase handling) under parquet-hadoop's plain
-  * `ParquetWriter`, with the handful of session confs its `init`
-  * requires pinned at driver time into a serializable Configuration.
-  * Lives under the sql package for the `private[sql]` SQLConf access —
-  * the [[ColumnBridge]] technique; no other internal API is touched. */
+/** Executor-side single-file parquet `InternalRow` writer — what the
+  * lake's task-side writer lands every data file with (batch commits,
+  * row-level rewrites, streaming epochs), so each task can report its
+  * files and their footers itself instead of going through Spark's
+  * output committer and a driver-side listing. This bridge reuses
+  * Spark's [[ParquetWriteSupport]] (the exact row-to-parquet encoder
+  * every batch write uses — same physical layout, timestamps, rebase
+  * handling) under parquet-hadoop's plain `ParquetWriter`, with the
+  * session confs its `init` requires and the session compression codec
+  * pinned at driver time into a serializable Configuration. Row-group,
+  * page and dictionary sizing follow the same `parquet.*` keys
+  * `ParquetOutputFormat` reads. Lives under the sql package for the
+  * `private[sql]` SQLConf access — the [[ColumnBridge]] technique; no
+  * other internal API is touched. */
 object ParquetRowWriterBridge {
 
   /** Capture schema + write confs on the DRIVER; the result ships to
@@ -46,16 +47,34 @@ object ParquetRowWriterBridge {
       sql.parquetFieldIdWriteEnabled.toString)
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       sql.getConf(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE).toString)
+    // the session codec (`spark.sql.parquet.compression.codec`),
+    // resolved exactly as a batch `df.write.parquet` resolves it
+    conf.set(ParquetOutputFormat.COMPRESSION,
+      new ParquetOptions(Map.empty[String, String], sql)
+        .compressionCodecClassName)
     new Prepared(new SerializableConfiguration(conf))
   }
 
+  /** The schema a parquet read of written files reports: every field
+    * nullable (file sources read all columns as nullable). */
+  def asRead(schema: StructType): StructType = schema.asNullable
+
   final class Prepared(sc: SerializableConfiguration)
       extends Serializable {
-    def open(path: String): ParquetWriter[InternalRow] =
-      new RowBuilder(new Path(path), sc.value)
-        .withConf(sc.value)
-        .withCompressionCodec(CompressionCodecName.SNAPPY)
+    def open(path: String): ParquetWriter[InternalRow] = {
+      val conf = sc.value
+      new RowBuilder(new Path(path), conf)
+        .withConf(conf)
+        .withCompressionCodec(ParquetOutputFormat.getCompression(conf))
+        .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+        .withPageSize(ParquetOutputFormat.getPageSize(conf))
+        .withDictionaryPageSize(
+          ParquetOutputFormat.getDictionaryPageSize(conf))
+        .withDictionaryEncoding(
+          ParquetOutputFormat.getEnableDictionary(conf))
+        .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
         .build()
+    }
 
     /** The captured session Hadoop conf — task-side cleanup (abort
       * paths) must resolve filesystems with the SAME conf the writer

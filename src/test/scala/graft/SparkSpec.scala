@@ -23,6 +23,8 @@ object TestSpark {
       // exercises it, not just the Verify/Bench mains)
       .config("spark.hadoop.fs.file.impl",
         "graft.sources.FastLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        "graft.sources.FastLocalFs")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
@@ -44,6 +46,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterEach {
         .forEach(p => Files.deleteIfExists(p))
       finally paths.close()
     }
+  }
+
+  /** Fully qualified paths of the parquet files directly under `dir`
+    * — the manifest form of files a foreign writer landed there. */
+  def parquetFilesIn(dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(p).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+      .map(fs.makeQualified(_).toString)
   }
 
   /** Cache-lifecycle guard: NO test may leave an entry in the cache

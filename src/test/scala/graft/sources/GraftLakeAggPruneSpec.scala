@@ -139,22 +139,24 @@ class GraftLakeAggPruneSpec extends SparkSpec {
     val (cat, _) = freshCatalog()
     spark.sql(s"CREATE TABLE $cat.fact (k INT, v DOUBLE) " +
       s"TBLPROPERTIES('graft.write.ordered-by'='k')")
-    // clustered insert -> files own disjoint k ranges
+    // one clustered insert per 25-key band -> data files own
+    // disjoint k ranges
     spark.range(0, 4000).selectExpr("CAST(id % 100 AS INT) AS k",
       "CAST(id AS DOUBLE) AS v")
       .repartition(8)
       .createOrReplaceTempView("glap_fact_src")
-    spark.sql(s"INSERT INTO $cat.fact SELECT * FROM glap_fact_src")
+    (0 until 4).foreach(b => spark.sql(s"INSERT INTO $cat.fact SELECT * " +
+      s"FROM glap_fact_src WHERE k DIV 25 = $b"))
     spark.range(0, 100).selectExpr("CAST(id AS INT) AS dk",
-      "id % 10 AS grp").createOrReplaceTempView("glap_dim")
+      "id DIV 25 AS grp").createOrReplaceTempView("glap_dim")
     LakeRuntimeFilterScan.lastPrune.set(-1L)
     val df = spark.sql(
       s"""SELECT sum(f.v) AS s, count(*) AS c
          |FROM $cat.fact f JOIN glap_dim d ON f.k = d.dk
          |WHERE d.grp = 0""".stripMargin)
     val r = df.collect()(0)
-    // oracle: k % 10 == 0 rows of 0..3999 with k = id % 100
-    val expect = (0L until 4000L).filter(i => (i % 100) % 10 == 0)
+    // oracle: k < 25 rows of 0..3999 with k = id % 100
+    val expect = (0L until 4000L).filter(i => i % 100 < 25)
     assert(r.getLong(1) === expect.size.toLong)
     assert(r.getDouble(0) === expect.map(_.toDouble).sum)
     val packed = LakeRuntimeFilterScan.lastPrune.get()

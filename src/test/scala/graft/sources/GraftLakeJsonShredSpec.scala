@@ -95,8 +95,7 @@ class GraftLakeJsonShredSpec extends SparkSpec {
     val foreignDir = s"$root/e/files-v${head + 1}-foreign"
     Seq((4L, """{"k": "d"}""")).toDF("id", "props")
       .coalesce(1).write.parquet(foreignDir)
-    val foreign = VersionedTable.listDataFiles(spark, s"$root/e",
-      foreignDir)
+    val foreign = parquetFilesIn(foreignDir)
     VersionedTable.publishVersion(spark, s"$root/e", head + 1,
       snap.dataFiles ++ foreign, snap.deleteFiles, snap.stats,
       snap.meta, op = "foreign")

@@ -27,8 +27,8 @@ class GraftLakeProcSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE $cat.t (k BIGINT)")
     (1 to 5).foreach(i =>
       spark.sql(s"INSERT INTO $cat.t VALUES ($i)")) // v1..v5
-    // 5 one-row files + the empty CREATE commit's schema file
-    assert(VersionedTable.filesOf(spark, s"$root/t", 5).size === 6)
+    // 5 one-row files (CREATE lands no file)
+    assert(VersionedTable.filesOf(spark, s"$root/t", 5).size === 5)
     val r = spark.sql(
       s"CALL $cat.system.compact(table => 't', target_files => 2)")
       .collect()(0)

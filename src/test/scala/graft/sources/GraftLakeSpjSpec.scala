@@ -471,11 +471,16 @@ class GraftLakeSpjSpec extends SparkSpec {
     val stray = s"$tdir/files-vX-foreign"
     (900L to 901L).toDF("k").withColumn("v", col("k"))
       .coalesce(1).write.parquet(stray)
-    val strayFile = VersionedTable.listDataFiles(spark, tdir, stray)
+    val strayFile = parquetFilesIn(stray)
     val head = VersionedTable.latestVersion(spark, tdir).get
     val snap0 = VersionedTable.snapshotOf(spark, tdir, head)
+    // publishVersion opens no file: the foreign writer hands over its
+    // files' stats like the engine's own writers do
+    val conf = spark.sparkContext.hadoopConfiguration
     VersionedTable.publishVersion(spark, tdir, head + 1,
-      snap0.dataFiles ++ strayFile, Seq.empty, snap0.stats, snap0.meta)
+      snap0.dataFiles ++ strayFile, Seq.empty,
+      snap0.stats ++ strayFile.map(p => p -> LakeFileStats.read(p, conf)),
+      snap0.meta)
     val withDebt = spark.sql(s"SELECT * FROM $cat.pm.partitions")
       .collect()
     assert(withDebt.exists(_.isNullAt(0)),
